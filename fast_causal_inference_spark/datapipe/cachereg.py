@@ -15,6 +15,9 @@ here, and :func:`release_dedup_caches` unpersists everything registered
 so far — call it between corpora, or when a pipeline is done with its
 pair outputs.  (``spark.catalog.clearCache()`` also works but drops
 EVERY cached relation in the session, including the caller's own.)
+These caches stay outside the per-call ``ExitStack`` scope that
+releases solver caches (``operators.design.persist``): a scope ends
+with its call, and these must outlive it to be shared across calls.
 """
 
 from __future__ import annotations

@@ -25,9 +25,12 @@ evidence).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.design import persist
 from .text import bind_once, tokens
 
 __all__ = ["train_bigram_lm", "score_perplexity", "perplexity_filter",
@@ -77,29 +80,34 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text") -> dict:
     # cache both count relations: training already pays a mandatory
     # action (the vocab count), and every scoring/filter pass re-reads
     # them — without the cache each downstream action re-aggregates the
-    # trusted corpus (the repo-wide reused-subtree convention)
-    bigrams = toks.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c12")).cache()
-    unis = (df.select(F.explode(tokens(F.col(text_col))).alias("w1"))
+    # trusted corpus (the repo-wide reused-subtree convention).  The
+    # scope releases them if training raises; on success pop_all hands
+    # them to the caller with the model
+    with ExitStack() as scope:
+        bigrams = persist(scope, toks.groupBy("w1", "w2").agg(
+            F.count(F.lit(1)).alias("c12")))
+        unis = persist(scope, df.select(
+            F.explode(tokens(F.col(text_col))).alias("w1"))
             .where(F.col("w1") != "")
-            .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")).cache())
-    # materialize both count relations concurrently — they are independent
-    # aggregations of the same trusted corpus; thread exceptions are
-    # re-raised on the caller so a Spark failure isn't masked (shared
-    # _spawn_action helper — the trigram trainer uses the same one)
-    res: dict = {}
-    threads = [_spawn_action(res, "v", unis.count),
-               _spawn_action(res, "b", bigrams.count)]
-    for th in threads:
-        th.join()
-    for v in res.values():
-        if isinstance(v, BaseException):
-            raise v
-    if int(res["v"]) == 0:
-        raise ValueError(
-            "train_bigram_lm: the trusted corpus has no non-empty tokens"
-            " — a vocab_size of 0 would make every add-k denominator 0 "
-            "at scoring time")
+            .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")))
+        # materialize both count relations concurrently — they are independent
+        # aggregations of the same trusted corpus; thread exceptions are
+        # re-raised on the caller so a Spark failure isn't masked (shared
+        # _spawn_action helper — the trigram trainer uses the same one)
+        res: dict = {}
+        threads = [_spawn_action(res, "v", unis.count),
+                   _spawn_action(res, "b", bigrams.count)]
+        for th in threads:
+            th.join()
+        for v in res.values():
+            if isinstance(v, BaseException):
+                raise v
+        if int(res["v"]) == 0:
+            raise ValueError(
+                "train_bigram_lm: the trusted corpus has no non-empty tokens"
+                " — a vocab_size of 0 would make every add-k denominator 0 "
+                "at scoring time")
+        scope.pop_all()
     return {"bigrams": bigrams, "unigrams": unis,
             "vocab_size": int(res["v"])}
 
@@ -198,36 +206,41 @@ def train_trigram_lm(df: DataFrame, text_col: str = "text") -> dict:
     n_parts = int(df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"))
     src = df
-    tg = (src.repartition(n_parts)
-          .select(F.explode(_trigrams(F.col(text_col))).alias("g"))
-          .select("g.w1", "g.w2", "g.w3")
-          .where((F.col("w1") != "") & (F.col("w2") != "")
-                 & (F.col("w3") != ""))
-          .groupBy("w1", "w2", "w3")
-          .agg(F.count(F.lit(1)).alias("c123")).cache())
-    bg = (src.repartition(n_parts)
-          .select(F.explode(_bigrams(F.col(text_col))).alias("g"))
-          .select("g.w1", "g.w2")
-          .where((F.col("w1") != "") & (F.col("w2") != ""))
-          .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).cache())
-    uni = (src.select(F.explode(tokens(F.col(text_col))).alias("w"))
-           .where(F.col("w") != "")
-           .groupBy("w").agg(F.count(F.lit(1)).alias("c1")).cache())
-    res: dict = {}
-    threads = [_spawn_action(res, "tg", tg.count),
-               _spawn_action(res, "bg", bg.count),
-               _spawn_action(res, "uni", lambda: uni.agg(
-                   F.count(F.lit(1)).alias("v"),
-                   F.sum("c1").alias("n")).collect()[0])]
-    for th in threads:
-        th.join()
-    for v in res.values():
-        if isinstance(v, BaseException):
-            raise v
-    if res["uni"]["n"] is None or int(res["uni"]["v"]) == 0:
-        raise ValueError(
-            "train_trigram_lm: the trusted corpus has no non-empty "
-            "tokens (sum of counts is NULL) — nothing to train on")
+    # cached count relations: released if training raises, handed to
+    # the caller with the model on success (train_bigram_lm)
+    with ExitStack() as scope:
+        tg = persist(scope, src.repartition(n_parts)
+                     .select(F.explode(_trigrams(F.col(text_col))).alias("g"))
+                     .select("g.w1", "g.w2", "g.w3")
+                     .where((F.col("w1") != "") & (F.col("w2") != "")
+                            & (F.col("w3") != ""))
+                     .groupBy("w1", "w2", "w3")
+                     .agg(F.count(F.lit(1)).alias("c123")))
+        bg = persist(scope, src.repartition(n_parts)
+                     .select(F.explode(_bigrams(F.col(text_col))).alias("g"))
+                     .select("g.w1", "g.w2")
+                     .where((F.col("w1") != "") & (F.col("w2") != ""))
+                     .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
+        uni = persist(scope, src.select(
+            F.explode(tokens(F.col(text_col))).alias("w"))
+            .where(F.col("w") != "")
+            .groupBy("w").agg(F.count(F.lit(1)).alias("c1")))
+        res: dict = {}
+        threads = [_spawn_action(res, "tg", tg.count),
+                   _spawn_action(res, "bg", bg.count),
+                   _spawn_action(res, "uni", lambda: uni.agg(
+                       F.count(F.lit(1)).alias("v"),
+                       F.sum("c1").alias("n")).collect()[0])]
+        for th in threads:
+            th.join()
+        for v in res.values():
+            if isinstance(v, BaseException):
+                raise v
+        if res["uni"]["n"] is None or int(res["uni"]["v"]) == 0:
+            raise ValueError(
+                "train_trigram_lm: the trusted corpus has no non-empty "
+                "tokens (sum of counts is NULL) — nothing to train on")
+        scope.pop_all()
     return {"trigrams": tg, "bigrams": bg, "unigrams": uni,
             "vocab_size": int(res["uni"]["v"]),
             "n_tokens": int(res["uni"]["n"])}

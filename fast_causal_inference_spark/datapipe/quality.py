@@ -15,9 +15,12 @@ relations (distinct benchmark n-gram hashes; per-document top n-grams).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.design import persist
 from .dedup import shingle_hashes
 from .text import bind_once, word_ngrams
 
@@ -401,25 +404,27 @@ def train_quality_classifier(df: DataFrame, label_col: str,
     toks = (df.select(lab.alias("__y"),
                       F.explode(tokens(F.col(text_col))).alias("w"))
             .where(F.col("w") != ""))
-    counts = (toks.groupBy("w")
-              .agg(F.sum(F.when(F.col("__y") == 1, 1).otherwise(0))
-                   .alias("c_pos"),
-                   F.sum(F.when(F.col("__y") == 0, 1).otherwise(0))
-                   .alias("c_neg"))
-              .cache())
-    tot = counts.agg(F.sum("c_pos").alias("n_pos"),
-                     F.sum("c_neg").alias("n_neg"),
-                     F.count(F.lit(1)).alias("v")).collect()[0]
-    docs = df.agg(
-        F.sum(F.when(lab == 1, 1).otherwise(0)).alias("d_pos"),
-        F.sum(F.when(lab == 0, 1).otherwise(0)).alias("d_neg")).collect()[0]
-    if tot["n_pos"] is None or int(tot["v"]) == 0:
-        # token-free corpus: the sums come back NULL and a vocab of 0
-        # would put log(0) in every scoring denominator (same guard as
-        # train_bigram_lm)
-        raise ValueError(
-            "train_quality_classifier: the labeled corpus has no "
-            "non-empty tokens — nothing to train on")
+    # the cached count relation is released if training raises and
+    # handed to the caller with the model on success
+    with ExitStack() as scope:
+        counts = persist(scope, toks.groupBy("w").agg(
+            F.sum(F.when(F.col("__y") == 1, 1).otherwise(0)).alias("c_pos"),
+            F.sum(F.when(F.col("__y") == 0, 1).otherwise(0)).alias("c_neg")))
+        tot = counts.agg(F.sum("c_pos").alias("n_pos"),
+                         F.sum("c_neg").alias("n_neg"),
+                         F.count(F.lit(1)).alias("v")).collect()[0]
+        docs = df.agg(
+            F.sum(F.when(lab == 1, 1).otherwise(0)).alias("d_pos"),
+            F.sum(F.when(lab == 0, 1).otherwise(0)).alias("d_neg")
+        ).collect()[0]
+        if tot["n_pos"] is None or int(tot["v"]) == 0:
+            # token-free corpus: the sums come back NULL and a vocab of 0
+            # would put log(0) in every scoring denominator (same guard as
+            # train_bigram_lm)
+            raise ValueError(
+                "train_quality_classifier: the labeled corpus has no "
+                "non-empty tokens — nothing to train on")
+        scope.pop_all()
     return {"counts": counts, "n_pos": int(tot["n_pos"]),
             "n_neg": int(tot["n_neg"]), "vocab_size": int(tot["v"]),
             "d_pos": int(docs["d_pos"]), "d_neg": int(docs["d_neg"]),

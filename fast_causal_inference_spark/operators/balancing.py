@@ -28,12 +28,19 @@ in the matching/weighting family.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import (
+    collect_small_design,
+    persist,
+)
 
 __all__ = ["entropy_balancing", "EntropyBalance"]
 
@@ -158,121 +165,110 @@ def entropy_balancing(df: DataFrame, T: str, features: list[str],
         raise ValueError(f"entropy_balancing: empty arm (treated n={n1:.0f},"
                          f" control n={n0:.0f})")
     center = np.array([float(row[f"m{j}"]) / n1 for j in range(k)])
-    # persist the centered control design for the dual Newton loop
-    # (design.py pattern): k doubles per control row, re-scanned once
-    # per step + once per halving
-    from pyspark import StorageLevel
+    with ExitStack() as scope:
+        # persist the centered control design for the dual Newton loop
+        # (design.py pattern): k doubles per control row, re-scanned once
+        # per step + once per halving
+        ctl = persist(scope, work.where(t == F.lit(control_value)).select(
+            *[(x - F.lit(float(c))).alias(f"__c{j}__")
+              for j, (x, c) in enumerate(zip(xs, center))]),
+            StorageLevel.MEMORY_AND_DISK)
+        cs = [F.col(f"__c{j}__") for j in range(k)]
 
-    ctl = (work.where(t == F.lit(control_value))
-           .select(*[(x - F.lit(float(c))).alias(f"__c{j}__")
-                     for j, (x, c) in enumerate(zip(xs, center))])
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    cs = [F.col(f"__c{j}__") for j in range(k)]
+        def _scan(lam: np.ndarray, shift: float):
+            z: Column = F.lit(0.0)
+            for lj, c in zip(lam, cs):
+                z = z + F.lit(float(lj)) * c
+            e = F.exp(z - F.lit(float(shift)))
+            # project the exp weight once per row (inlining would expand
+            # the exp(λ·c) chain into every one of the k(k+3)/2 agg
+            # expressions)
+            step = ctl.select(*cs, e.alias("__e__"))
+            ec = F.col("__e__")
+            aggs = [F.sum(ec).alias("s")]
+            for i, ci in enumerate(cs):
+                aggs.append(F.sum(ec * ci).alias(f"g{i}"))
+                for j in range(i, k):
+                    aggs.append(F.sum(ec * ci * cs[j]).alias(f"h{i}_{j}"))
+            r = step.agg(*aggs).collect()[0]
+            s = float(r["s"])
+            g = np.array([float(r[f"g{i}"]) for i in range(k)])
+            H = np.empty((k, k))
+            for i in range(k):
+                for j in range(i, k):
+                    H[i, j] = H[j, i] = float(r[f"h{i}_{j}"])
+            return s, g, H
 
-    def _scan(lam: np.ndarray, shift: float):
-        z: Column = F.lit(0.0)
-        for lj, c in zip(lam, cs):
-            z = z + F.lit(float(lj)) * c
-        e = F.exp(z - F.lit(float(shift)))
-        # project the exp weight once per row (inlining would expand
-        # the exp(λ·c) chain into every one of the k(k+3)/2 agg
-        # expressions)
-        step = ctl.select(*cs, e.alias("__e__"))
-        ec = F.col("__e__")
-        aggs = [F.sum(ec).alias("s")]
-        for i, ci in enumerate(cs):
-            aggs.append(F.sum(ec * ci).alias(f"g{i}"))
-            for j in range(i, k):
-                aggs.append(F.sum(ec * ci * cs[j]).alias(f"h{i}_{j}"))
-        r = step.agg(*aggs).collect()[0]
-        s = float(r["s"])
-        g = np.array([float(r[f"g{i}"]) for i in range(k)])
-        H = np.empty((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                H[i, j] = H[j, i] = float(r[f"h{i}_{j}"])
-        return s, g, H
+        # small-input fast path (round 11, design.collect_small_design):
+        # collect the centered control design once; the dual Newton scans
+        # (and step-halving re-scans) run driver-side in numpy
+        des, ctl = collect_small_design(scope, ctl, cs, F.lit(0.0),
+                                        F.lit(0.0), n_rows=int(n0))
 
-    # small-input fast path (round 11, design.collect_small_design):
-    # collect the centered control design once; the dual Newton scans
-    # (and step-halving re-scans) run driver-side in numpy
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        repartition_big_design,
-    )
+        def _scan_np(lam: np.ndarray, shift: float):
+            C, _, _ = des
+            with np.errstate(over="ignore", under="ignore"):
+                e = np.exp(C @ lam - shift)
+            s = float(e.sum())
+            g = C.T @ e
+            H = (C * e[:, None]).T @ C
+            return s, g, H
 
-    des = collect_small_design(ctl, cs, F.lit(0.0), F.lit(0.0),
-                               n_rows=int(n0))
-    if des is None:
-        ctl = repartition_big_design(ctl, int(n0))
+        scan = _scan_np if des is not None else _scan
 
-    def _scan_np(lam: np.ndarray, shift: float):
-        C, _, _ = des
-        with np.errstate(over="ignore", under="ignore"):
-            e = np.exp(C @ lam - shift)
-        s = float(e.sum())
-        g = C.T @ e
-        H = (C * e[:, None]).T @ C
-        return s, g, H
-
-    scan = _scan_np if des is not None else _scan
-
-    lam = np.zeros(k)
-    shift = 0.0                   # running log-scale guard against overflow
-    s, g, H = scan(lam, shift)
-    obj = np.log(s) + shift       # log sum exp — the dual objective
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        grad = g / s              # ∇ logsumexp = weighted mean of c
-        hess = H / s - np.outer(grad, grad)
-        try:
-            step = -np.linalg.solve(
-                hess + 1e-12 * np.eye(k) * max(1.0, np.trace(hess) / k),
-                grad)
-        except np.linalg.LinAlgError:
-            step = -np.linalg.lstsq(hess, grad, rcond=None)[0]
-        if float(np.max(np.abs(grad))) < tol * max(
-                1.0, float(np.max(np.abs(center)))):
-            converged = True
-            break
-        trial = lam + step
-        shift2 = shift + float(step @ grad)       # keep exp() centered
-        s2, g2, H2 = scan(trial, shift2)
-        obj2 = np.log(s2) + shift2
-        halvings = 0
-        while not np.isfinite(obj2) or obj2 > obj + 1e-12 * abs(obj):
-            if halvings >= 25:
-                ctl.unpersist()
-                raise ValueError(
-                    "entropy_balancing did not converge: the treated "
-                    "moment target likely lies outside the convex hull "
-                    "of control moments (no feasible weights); drop or "
-                    "coarsen features")
-            step *= 0.5
+        lam = np.zeros(k)
+        shift = 0.0               # running log-scale guard against overflow
+        s, g, H = scan(lam, shift)
+        obj = np.log(s) + shift       # log sum exp — the dual objective
+        converged = False
+        it = 0
+        for it in range(1, max_iter + 1):
+            grad = g / s              # ∇ logsumexp = weighted mean of c
+            hess = H / s - np.outer(grad, grad)
+            try:
+                step = -np.linalg.solve(
+                    hess + 1e-12 * np.eye(k) * max(1.0, np.trace(hess) / k),
+                    grad)
+            except np.linalg.LinAlgError:
+                step = -np.linalg.lstsq(hess, grad, rcond=None)[0]
+            if float(np.max(np.abs(grad))) < tol * max(
+                    1.0, float(np.max(np.abs(center)))):
+                converged = True
+                break
             trial = lam + step
-            shift2 = shift + float(step @ grad)
+            shift2 = shift + float(step @ grad)       # keep exp() centered
             s2, g2, H2 = scan(trial, shift2)
             obj2 = np.log(s2) + shift2
-            halvings += 1
-        lam, s, g, H, obj, shift = trial, s2, g2, H2, obj2, shift2
-    if not converged:
-        # an infeasible target makes the dual unbounded below: the
-        # objective decreases forever while the gradient (the weighted
-        # moment gap) never reaches zero
-        gap = float(np.max(np.abs(g / s)))
-        if gap > 1e-6 * max(1.0, float(np.max(np.abs(center)))):
-            ctl.unpersist()
-            raise ValueError(
-                "entropy_balancing did not converge after "
-                f"{max_iter} iterations (moment gap {gap:.3g}): the "
-                "treated moment target likely lies outside the convex "
-                "hull of control moments (no feasible weights); drop or "
-                "coarsen features")
-    # normalize: control weights sum to n_treated —
-    # w_i = n1 * exp(lam.c_i) / Σexp(lam.c_j), kept on the log scale
-    log_norm = float(np.log(n1) - np.log(s) - shift)
-    ctl.unpersist()
+            halvings = 0
+            while not np.isfinite(obj2) or obj2 > obj + 1e-12 * abs(obj):
+                if halvings >= 25:
+                    raise ValueError(
+                        "entropy_balancing did not converge: the treated "
+                        "moment target likely lies outside the convex hull "
+                        "of control moments (no feasible weights); drop or "
+                        "coarsen features")
+                step *= 0.5
+                trial = lam + step
+                shift2 = shift + float(step @ grad)
+                s2, g2, H2 = scan(trial, shift2)
+                obj2 = np.log(s2) + shift2
+                halvings += 1
+            lam, s, g, H, obj, shift = trial, s2, g2, H2, obj2, shift2
+        if not converged:
+            # an infeasible target makes the dual unbounded below: the
+            # objective decreases forever while the gradient (the weighted
+            # moment gap) never reaches zero
+            gap = float(np.max(np.abs(g / s)))
+            if gap > 1e-6 * max(1.0, float(np.max(np.abs(center)))):
+                raise ValueError(
+                    "entropy_balancing did not converge after "
+                    f"{max_iter} iterations (moment gap {gap:.3g}): the "
+                    "treated moment target likely lies outside the convex "
+                    "hull of control moments (no feasible weights); drop or "
+                    "coarsen features")
+        # normalize: control weights sum to n_treated —
+        # w_i = n1 * exp(lam.c_i) / Σexp(lam.c_j), kept on the log scale
+        log_norm = float(np.log(n1) - np.log(s) - shift)
     return EntropyBalance(lam=lam, center=center, features=features, T=T,
                           treatment_value=treatment_value,
                           control_value=control_value, n_treated=n1,

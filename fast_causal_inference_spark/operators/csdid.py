@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import math
 import warnings
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 import numpy as np
@@ -62,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import persist
 
 
 @dataclass
@@ -114,192 +116,191 @@ def callaway_santanna(df: DataFrame, Y: str, unit: str, time: str,
     work = (df.where(ucol.isNotNull() & tcol.isNotNull() & y.isNotNull())
             .select(ucol.alias("__u"), tcol.cast("long").alias("__t"),
                     y.alias("__y"), acol.cast("long").alias("__a")))
-    cells = (work.groupBy("__u", "__t")
-             .agg(F.avg("__y").alias("__y"), F.max("__a").alias("__a"),
-                  F.countDistinct("__a").alias("__ka"),
-                  F.count("__a").alias("__na"),
-                  F.count(F.lit(1)).alias("__nr"))
-             .cache())
-    # validity: adoption constant per unit (incl. no NULL/value mixing),
-    # plus the small group/period domains — one aggregation each
-    # validity + domain as two independent jobs over the CACHED cells,
-    # overlapped on driver threads: one wall-clock step without the
-    # unbounded flatten(collect_list) a single fused aggregation would
-    # need (collect_set dedups map-side, so each job's buffers stay
-    # O(distinct values) — a U×T panel must never funnel U arrays into
-    # one aggregate buffer)
-    from concurrent.futures import ThreadPoolExecutor
+    with ExitStack() as scope:
+        cells = persist(scope, work.groupBy("__u", "__t").agg(
+            F.avg("__y").alias("__y"), F.max("__a").alias("__a"),
+            F.countDistinct("__a").alias("__ka"),
+            F.count("__a").alias("__na"),
+            F.count(F.lit(1)).alias("__nr")))
+        # validity: adoption constant per unit (incl. no NULL/value mixing),
+        # plus the small group/period domains — one aggregation each
+        # validity + domain as two independent jobs over the CACHED cells,
+        # overlapped on driver threads: one wall-clock step without the
+        # unbounded flatten(collect_list) a single fused aggregation would
+        # need (collect_set dedups map-side, so each job's buffers stay
+        # O(distinct values) — a U×T panel must never funnel U arrays into
+        # one aggregate buffer)
+        from concurrent.futures import ThreadPoolExecutor
 
-    def _chk():
-        return (cells.groupBy("__u")
-                .agg(F.countDistinct("__a").alias("kd"),
-                     F.max("__ka").alias("ka"),
-                     F.sum("__na").alias("na"), F.sum("__nr").alias("nr"))
-                .agg(F.sum(((F.col("kd") > 1) | (F.col("ka") > 1)
-                            | ((F.col("na") > 0)
-                               & (F.col("na") < F.col("nr"))))
-                           .cast("int")).alias("bad"))
-                .collect()[0])
+        def _chk():
+            return (cells.groupBy("__u")
+                    .agg(F.countDistinct("__a").alias("kd"),
+                         F.max("__ka").alias("ka"),
+                         F.sum("__na").alias("na"), F.sum("__nr").alias("nr"))
+                    .agg(F.sum(((F.col("kd") > 1) | (F.col("ka") > 1)
+                                | ((F.col("na") > 0)
+                                   & (F.col("na") < F.col("nr"))))
+                               .cast("int")).alias("bad"))
+                    .collect()[0])
 
-    def _dom():
-        return cells.agg(
-            F.sort_array(F.collect_set("__t")).alias("times"),
-            F.sort_array(F.collect_set("__a")).alias("groups")).collect()[0]
+        def _dom():
+            return cells.agg(
+                F.sort_array(F.collect_set("__t")).alias("times"),
+                F.sort_array(F.collect_set("__a")).alias("groups")
+            ).collect()[0]
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        chk_f, dom_f = pool.submit(_chk), pool.submit(_dom)
-        chk, dom = chk_f.result(), dom_f.result()
-    if int(chk["bad"] or 0) > 0:
-        cells.unpersist()
-        raise ValueError(
-            f"adoption expression {adoption!r} is not constant within "
-            f"{int(chk['bad'])} unit(s) (or mixes NULL and values); "
-            "Callaway-Sant'Anna needs a unit-level adoption period")
-    times = [int(t) for t in dom["times"]]
-    groups = [int(g) for g in dom["groups"]]
-    tset = set(times)
-    prev = {t: times[i - 1] for i, t in enumerate(times) if i > 0}
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            chk_f, dom_f = pool.submit(_chk), pool.submit(_dom)
+            chk, dom = chk_f.result(), dom_f.result()
+        if int(chk["bad"] or 0) > 0:
+            raise ValueError(
+                f"adoption expression {adoption!r} is not constant within "
+                f"{int(chk['bad'])} unit(s) (or mixes NULL and values); "
+                "Callaway-Sant'Anna needs a unit-level adoption period")
+        times = [int(t) for t in dom["times"]]
+        groups = [int(g) for g in dom["groups"]]
+        tset = set(times)
+        prev = {t: times[i - 1] for i, t in enumerate(times) if i > 0}
 
-    spec, skipped = [], []
-    for g in groups:
-        if g - 1 not in tset:
-            skipped.append(g)
-            continue
-        for t in times:
-            if base_period == "universal":
-                b = g - 1
-            else:                      # varying: short pre-period diffs
-                b = g - 1 if t >= g else prev.get(t)
-                if b is None:
-                    continue
-            if t == b:
+        spec, skipped = [], []
+        for g in groups:
+            if g - 1 not in tset:
+                skipped.append(g)
                 continue
-            spec.append((len(spec), g, t, b))
-    if skipped:
-        warnings.warn(
-            f"groups {skipped} have no pre-period (g-1 not observed) "
-            "and were skipped", stacklevel=2)
-    if not spec:
-        cells.unpersist()
-        raise ValueError("no estimable (group, time) cells: every group "
-                         "lacks a pre-treatment base period")
-    spark = df.sparkSession
-    spec_df = spark.createDataFrame(spec, "cid INT, g LONG, t LONG, b LONG")
+            for t in times:
+                if base_period == "universal":
+                    b = g - 1
+                else:                      # varying: short pre-period diffs
+                    b = g - 1 if t >= g else prev.get(t)
+                    if b is None:
+                        continue
+                if t == b:
+                    continue
+                spec.append((len(spec), g, t, b))
+        if skipped:
+            warnings.warn(
+                f"groups {skipped} have no pre-period (g-1 not observed) "
+                "and were skipped", stacklevel=2)
+        if not spec:
+            raise ValueError("no estimable (group, time) cells: every group "
+                             "lacks a pre-treatment base period")
+        spark = df.sparkSession
+        spec_df = spark.createDataFrame(spec,
+                                        "cid INT, g LONG, t LONG, b LONG")
 
-    c = cells.select("__u", "__t", "__y", "__a")
-    j = c.join(F.broadcast(spec_df),
-               (c["__t"] == spec_df["t"]) | (c["__t"] == spec_df["b"]))
-    ud = (j.groupBy("cid", "g", "t", "b", "__u")
-          .agg(F.max(F.when(F.col("__t") == F.col("t"), F.col("__y")))
-               .alias("yt"),
-               F.max(F.when(F.col("__t") == F.col("b"), F.col("__y")))
-               .alias("yb"),
-               F.max("__a").alias("ga"))
-          .where(F.col("yt").isNotNull() & F.col("yb").isNotNull())
-          .withColumn("d", F.col("yt") - F.col("yb")))
-    if control == "never_treated":
-        ctrl = F.col("ga").isNull()
-    else:
-        ctrl = F.col("ga").isNull() | \
-            (F.col("ga") > F.greatest(F.col("t"), F.col("b")))
-    ud = (ud.withColumn("role", F.when(F.col("ga") == F.col("g"), 1)
-                        .when(ctrl, 0))
-          .where(F.col("role").isNotNull())
-          .select("cid", "g", "t", "b", "__u", "d", "role")
-          .cache())
+        c = cells.select("__u", "__t", "__y", "__a")
+        j = c.join(F.broadcast(spec_df),
+                   (c["__t"] == spec_df["t"]) | (c["__t"] == spec_df["b"]))
+        ud = (j.groupBy("cid", "g", "t", "b", "__u")
+              .agg(F.max(F.when(F.col("__t") == F.col("t"), F.col("__y")))
+                   .alias("yt"),
+                   F.max(F.when(F.col("__t") == F.col("b"), F.col("__y")))
+                   .alias("yb"),
+                   F.max("__a").alias("ga"))
+              .where(F.col("yt").isNotNull() & F.col("yb").isNotNull())
+              .withColumn("d", F.col("yt") - F.col("yb")))
+        if control == "never_treated":
+            ctrl = F.col("ga").isNull()
+        else:
+            ctrl = F.col("ga").isNull() | \
+                (F.col("ga") > F.greatest(F.col("t"), F.col("b")))
+        ud = persist(scope, ud.withColumn(
+            "role", F.when(F.col("ga") == F.col("g"), 1).when(ctrl, 0))
+            .where(F.col("role").isNotNull())
+            .select("cid", "g", "t", "b", "__u", "d", "role"))
 
-    one = F.lit(1)
-    r1 = (F.col("role") == 1).cast("double")
-    r0 = (F.col("role") == 0).cast("double")
-    stats = (ud.groupBy("cid", "g", "t", "b")
-             .agg(F.sum(r1).alias("n1"), F.sum(r1 * F.col("d")).alias("s1"),
-                  F.sum(r1 * F.col("d") * F.col("d")).alias("ss1"),
-                  F.sum(r0).alias("n0"), F.sum(r0 * F.col("d")).alias("s0"),
-                  F.sum(r0 * F.col("d") * F.col("d")).alias("ss0"))
-             .collect())
-    zq = _zq(alpha)
-    rows, cs_mean, thin_cells = [], {}, []
-    for r in stats:
-        n1, n0 = float(r["n1"]), float(r["n0"])
-        if n1 < 2 or n0 < 2:
-            # record it: a silently-vanished cell means the event-study /
-            # group / overall aggregations run over a DIFFERENT cell set
-            # than the user specified (the base-period skips already warn
-            # and return in skipped_groups — same contract here)
-            thin_cells.append((int(r["g"]), int(r["t"])))
-            continue
-        m1, m0 = r["s1"] / n1, r["s0"] / n0
-        v1 = max(r["ss1"] - n1 * m1 * m1, 0.0) / (n1 - 1)
-        v0 = max(r["ss0"] - n0 * m0 * m0, 0.0) / (n0 - 1)
-        att = m1 - m0
-        se = math.sqrt(v1 / n1 + v0 / n0)
-        tstat = att / se if se > 0 else float("nan")
-        # Welch-Satterthwaite df for the single-cell test
-        num = (v1 / n1 + v0 / n0) ** 2
-        den = (v1 / n1) ** 2 / (n1 - 1) + (v0 / n0) ** 2 / (n0 - 1)
-        dof = num / den if den > 0 else n1 + n0 - 2
-        p = float(2 * dist.t_sf(abs(tstat), dof)) if se > 0 else float("nan")
-        rows.append({"group": int(r["g"]), "time": int(r["t"]),
-                     "base": int(r["b"]), "att": float(att),
-                     "stderr": float(se), "t_stat": float(tstat),
-                     "p_value": p, "lower": float(att - zq * se),
-                     "upper": float(att + zq * se),
-                     "n_treated": int(n1), "n_control": int(n0)})
-        cs_mean[int(r["cid"])] = (int(r["g"]), int(r["t"]), float(m1),
-                                  float(m0), n1, n0, float(att))
-    if thin_cells:
-        warnings.warn(
-            f"callaway_santanna: {len(thin_cells)} (group, time) cell(s) "
-            f"dropped for having < 2 treated or < 2 control units "
-            f"{sorted(thin_cells)[:10]}{'…' if len(thin_cells) > 10 else ''}"
-            " — the event-study/group/overall aggregations cover the "
-            "remaining cells only", stacklevel=2)
-    if not rows:
-        ud.unpersist()
-        cells.unpersist()
-        raise ValueError("no (group, time) cell has >= 2 treated and "
-                         ">= 2 control units")
-    att_gt = (pd.DataFrame(rows).sort_values(["group", "time"])
-              .reset_index(drop=True))
+        one = F.lit(1)
+        r1 = (F.col("role") == 1).cast("double")
+        r0 = (F.col("role") == 0).cast("double")
+        stats = (ud.groupBy("cid", "g", "t", "b")
+                 .agg(F.sum(r1).alias("n1"),
+                      F.sum(r1 * F.col("d")).alias("s1"),
+                      F.sum(r1 * F.col("d") * F.col("d")).alias("ss1"),
+                      F.sum(r0).alias("n0"),
+                      F.sum(r0 * F.col("d")).alias("s0"),
+                      F.sum(r0 * F.col("d") * F.col("d")).alias("ss0"))
+                 .collect())
+        zq = _zq(alpha)
+        rows, cs_mean, thin_cells = [], {}, []
+        for r in stats:
+            n1, n0 = float(r["n1"]), float(r["n0"])
+            if n1 < 2 or n0 < 2:
+                # record it: a silently-vanished cell means the event-study /
+                # group / overall aggregations run over a DIFFERENT cell set
+                # than the user specified (the base-period skips already warn
+                # and return in skipped_groups — same contract here)
+                thin_cells.append((int(r["g"]), int(r["t"])))
+                continue
+            m1, m0 = r["s1"] / n1, r["s0"] / n0
+            v1 = max(r["ss1"] - n1 * m1 * m1, 0.0) / (n1 - 1)
+            v0 = max(r["ss0"] - n0 * m0 * m0, 0.0) / (n0 - 1)
+            att = m1 - m0
+            se = math.sqrt(v1 / n1 + v0 / n0)
+            tstat = att / se if se > 0 else float("nan")
+            # Welch-Satterthwaite df for the single-cell test
+            num = (v1 / n1 + v0 / n0) ** 2
+            den = (v1 / n1) ** 2 / (n1 - 1) + (v0 / n0) ** 2 / (n0 - 1)
+            dof = num / den if den > 0 else n1 + n0 - 2
+            p = float(2 * dist.t_sf(abs(tstat), dof)) if se > 0 \
+                else float("nan")
+            rows.append({"group": int(r["g"]), "time": int(r["t"]),
+                         "base": int(r["b"]), "att": float(att),
+                         "stderr": float(se), "t_stat": float(tstat),
+                         "p_value": p, "lower": float(att - zq * se),
+                         "upper": float(att + zq * se),
+                         "n_treated": int(n1), "n_control": int(n0)})
+            cs_mean[int(r["cid"])] = (int(r["g"]), int(r["t"]), float(m1),
+                                      float(m0), n1, n0, float(att))
+        if thin_cells:
+            warnings.warn(
+                f"callaway_santanna: {len(thin_cells)} (group, time) cell(s) "
+                f"dropped for having < 2 treated or < 2 control units "
+                f"{sorted(thin_cells)[:10]}"
+                f"{'…' if len(thin_cells) > 10 else ''}"
+                " — the event-study/group/overall aggregations cover the "
+                "remaining cells only", stacklevel=2)
+        if not rows:
+            raise ValueError("no (group, time) cell has >= 2 treated and "
+                             ">= 2 control units")
+        att_gt = (pd.DataFrame(rows).sort_values(["group", "time"])
+                  .reset_index(drop=True))
 
-    # ---- aggregation weights (driver; |cells| is tiny) ----
-    # targets: evt_<e> (all relative periods), grp_<g> (post cells,
-    # equal weight over t), overall (post cells, weight ∝ n_treated —
-    # the CS 'simple' aggregation)
-    targets: dict[str, dict[int, float]] = {}
-    for cid, (g, t, m1, m0, n1, n0, att) in cs_mean.items():
-        e = t - g
-        targets.setdefault(f"evt_{e}", {})[cid] = n1
-        if e >= 0:
-            targets.setdefault(f"grp_{g}", {})[cid] = 1.0
-            targets.setdefault("overall", {})[cid] = n1
-    for w in targets.values():
-        tot = sum(w.values())
-        for cid in w:
-            w[cid] /= tot
-    est = {name: sum(w * cs_mean[cid][6] for cid, w in ws.items())
-           for name, ws in targets.items()}
+        # ---- aggregation weights (driver; |cells| is tiny) ----
+        # targets: evt_<e> (all relative periods), grp_<g> (post cells,
+        # equal weight over t), overall (post cells, weight ∝ n_treated —
+        # the CS 'simple' aggregation)
+        targets: dict[str, dict[int, float]] = {}
+        for cid, (g, t, m1, m0, n1, n0, att) in cs_mean.items():
+            e = t - g
+            targets.setdefault(f"evt_{e}", {})[cid] = n1
+            if e >= 0:
+                targets.setdefault(f"grp_{g}", {})[cid] = 1.0
+                targets.setdefault("overall", {})[cid] = n1
+        for w in targets.values():
+            tot = sum(w.values())
+            for cid in w:
+                w[cid] /= tot
+        est = {name: sum(w * cs_mean[cid][6] for cid, w in ws.items())
+               for name, ws in targets.items()}
 
-    # ---- influence-function SEs for every aggregation in ONE pass ----
-    tw = [(name, cid, w) for name, ws in targets.items()
-          for cid, w in ws.items()]
-    tw_df = spark.createDataFrame(tw, "target STRING, cid INT, w DOUBLE")
-    cm = spark.createDataFrame(
-        [(cid, v[2], v[3], v[4], v[5]) for cid, v in cs_mean.items()],
-        "cid INT, m1 DOUBLE, m0 DOUBLE, n1 DOUBLE, n0 DOUBLE")
-    contrib = F.when(F.col("role") == one,
-                     (F.col("d") - F.col("m1")) / F.col("n1")) \
-        .otherwise(-(F.col("d") - F.col("m0")) / F.col("n0"))
-    psi = (ud.join(F.broadcast(cm), "cid")
-           .join(F.broadcast(tw_df), "cid")
-           .groupBy("target", "__u")
-           .agg(F.sum(F.col("w") * contrib).alias("p"))
-           .groupBy("target")
-           .agg(F.sum(F.col("p") * F.col("p")).alias("v"))
-           .collect())
-    var = {r["target"]: float(r["v"]) for r in psi}
-    ud.unpersist()
-    cells.unpersist()
+        # ---- influence-function SEs for every aggregation in ONE pass ----
+        tw = [(name, cid, w) for name, ws in targets.items()
+              for cid, w in ws.items()]
+        tw_df = spark.createDataFrame(tw, "target STRING, cid INT, w DOUBLE")
+        cm = spark.createDataFrame(
+            [(cid, v[2], v[3], v[4], v[5]) for cid, v in cs_mean.items()],
+            "cid INT, m1 DOUBLE, m0 DOUBLE, n1 DOUBLE, n0 DOUBLE")
+        contrib = F.when(F.col("role") == one,
+                         (F.col("d") - F.col("m1")) / F.col("n1")) \
+            .otherwise(-(F.col("d") - F.col("m0")) / F.col("n0"))
+        psi = (ud.join(F.broadcast(cm), "cid")
+               .join(F.broadcast(tw_df), "cid")
+               .groupBy("target", "__u")
+               .agg(F.sum(F.col("w") * contrib).alias("p"))
+               .groupBy("target")
+               .agg(F.sum(F.col("p") * F.col("p")).alias("v"))
+               .collect())
+        var = {r["target"]: float(r["v"]) for r in psi}
 
     def _row(name, label_key, label_val):
         b = float(est[name])

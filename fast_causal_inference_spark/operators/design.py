@@ -16,21 +16,34 @@ the source table — and MEMORY_AND_DISK spills per-executor to local
 disk when it does not fit, so each iteration reads columnar in-memory
 (or local-disk) batches instead of re-scanning remote storage.
 
-Callers follow the repo convention (cf. ``ordinal.py``, ``kstest.py``):
-``unpersist()`` at every normal/raising exit rather than try/finally.
+Cache lifetime: a function that caches opens one
+``contextlib.ExitStack`` scope and persists through :func:`persist`,
+which registers the frame's ``unpersist`` on that scope.  The cache is
+released where the ``with`` block ends, on a normal and on a raising
+exit alike; the block ends after the function's last scan of it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 
 import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["persist_design", "collect_small_design", "collect_columns",
-           "SMALL_DESIGN_MAX_ROWS"]
+__all__ = ["persist", "persist_design", "collect_small_design",
+           "collect_columns", "small_design_limit", "SMALL_DESIGN_MAX_ROWS"]
+
+
+def persist(scope: ExitStack, df: DataFrame,
+            level: StorageLevel | None = None) -> DataFrame:
+    """Persist ``df`` at ``level`` (``None``: ``cache()``, the session's
+    default cache level) and register its ``unpersist`` on ``scope``."""
+    df = df.cache() if level is None else df.persist(level)
+    scope.callback(df.unpersist)
+    return df
 
 
 def collect_columns(df: DataFrame) -> dict[str, np.ndarray]:
@@ -65,41 +78,43 @@ SMALL_DESIGN_MAX_CELLS = int(os.environ.get(
     "FCIS_SMALL_DESIGN_CELLS", "16000000"))
 
 
-def collect_small_design(df: DataFrame, xs: list[Column], y: Column,
-                         off: Column,
-                         max_rows: int | None = None,
-                         n_rows: int | None = None,
-                         ) -> tuple[np.ndarray, np.ndarray,
-                                    np.ndarray] | None:
-    """Collect the projected design as ``(X[n,p], y[n], off[n])`` numpy
-    arrays when it fits the small-design budget (min of the row cap and
-    the cell budget divided by the design width); return None above the
-    cutoff (callers keep their distributed loop).
+def small_design_limit(width: int) -> int:
+    """Largest row count the collected path takes for a design of
+    ``width`` collected columns: the row cap, or the cell budget divided
+    by the width when that is smaller."""
+    return min(SMALL_DESIGN_MAX_ROWS,
+               SMALL_DESIGN_MAX_CELLS // max(width, 1))
 
-    The size gate is a COUNT first (pass ``n_rows`` when the caller
-    already knows it): counting prunes every projected column, so an
-    over-cutoff table costs one cheap aggregate — an earlier LIMIT-probe
-    variant shipped cutoff-many Arrow rows to the driver before giving
-    up, a measured multi-second tax on every big-input solver call.
-    The count also materializes the caller's persisted design, work the
-    distributed loop needs anyway."""
-    lim = SMALL_DESIGN_MAX_ROWS if max_rows is None else int(max_rows)
-    lim = min(lim, SMALL_DESIGN_MAX_CELLS // max(len(xs) + 2, 1))
-    if lim <= 0:
-        return None
-    n = int(df.count()) if n_rows is None else int(n_rows)
-    if n > lim:
-        return None
+
+def collect_small_design(scope: ExitStack, df: DataFrame, xs: list[Column],
+                         y: Column, off: Column, n_rows: int,
+                         ) -> tuple[tuple[np.ndarray, np.ndarray,
+                                          np.ndarray] | None, DataFrame]:
+    """Collect the projected design as ``(X[n,p], y[n], off[n])`` numpy
+    arrays when its ``n_rows`` fit :func:`small_design_limit`; returns
+    ``(design, df)``.  Above the cutoff the design is None and ``df``
+    comes back spread by :func:`repartition_big_design` (callers keep
+    their distributed loop over it).
+
+    The size gate is the caller's COUNT: counting prunes every projected
+    column, so an over-cutoff table costs one cheap aggregate — an
+    earlier LIMIT-probe variant shipped cutoff-many Arrow rows to the
+    driver before giving up, a measured multi-second tax on every
+    big-input solver call.  The count also materializes the caller's
+    persisted design, work the distributed loop needs anyway."""
+    lim = small_design_limit(len(xs) + 2)
+    if lim <= 0 or n_rows > lim:
+        return None, repartition_big_design(scope, df, n_rows)
     p = len(xs)
     sel = [c.alias(f"__cx{i}__") for i, c in enumerate(xs)]
     cols = collect_columns(
         df.select(*sel, y.alias("__cy__"), off.alias("__co__")))
     X = np.column_stack([cols[f"__cx{i}__"] for i in range(p)]) if p else \
         np.empty((len(cols["__cy__"]), 0))
-    return X, cols["__cy__"], cols["__co__"]
+    return (X, cols["__cy__"], cols["__co__"]), df
 
 
-def repartition_big_design(df: DataFrame, n_rows: int,
+def repartition_big_design(scope: ExitStack, df: DataFrame, n_rows: int,
                            min_rows: int = 3_000_000) -> DataFrame:
     """Spread an ABOVE-cutoff persisted design across the session's
     cores when the source layout yields fewer splits than cores.
@@ -113,14 +128,15 @@ def repartition_big_design(df: DataFrame, n_rows: int,
     full parallelism; round robin keeps the layout deterministic for a
     given (source layout, target count).
 
-    Only call this on the ``collect_small_design(...) is None`` branch:
-    below the cutoff the collected numpy path never scans the cache
-    again, and the golden-oracle scales (sf0.01) always sit below the
-    cutoff, so their float-sum combine order is untouched.
+    Only the above-cutoff branch calls this (``collect_small_design``,
+    and the solvers with their own collectors): below the cutoff the
+    collected numpy path never scans the cache again, and the
+    golden-oracle scales (sf0.01) always sit below the cutoff, so their
+    float-sum combine order is untouched.
 
-    Returns the repartitioned, persisted child (materialized before the
-    parent cache is dropped); the caller's ``unpersist()`` contract
-    transfers to the returned frame."""
+    Returns the repartitioned child persisted on ``scope``; it is
+    materialized before the parent's cache is dropped early, so the
+    solver holds one copy of the design while it iterates."""
     if n_rows < min_rows:
         return df
     try:
@@ -140,13 +156,15 @@ def repartition_big_design(df: DataFrame, n_rows: int,
         return df
     if spread >= min(cores, 8):
         return df
-    work = df.repartition(cores).persist(StorageLevel.MEMORY_AND_DISK)
+    work = persist(scope, df.repartition(cores), StorageLevel.MEMORY_AND_DISK)
     work.count()
+    # deliberate early release: the parent is dead once the child exists
     df.unpersist()
     return work
 
 
-def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
+def persist_design(scope: ExitStack, df: DataFrame, y: Column,
+                   feat_cols: list[Column],
                    off: Column | None = None, use_bias: bool = True,
                    ) -> tuple[DataFrame, Column, list[Column], Column]:
     """Project ``(y, features[, offset])`` to flat columns and persist.
@@ -156,7 +174,8 @@ def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
     (never materialized — constants cost storage, not compute), and
     ``off`` comes back as ``lit(0.0)`` when no offset was given.
 
-    The caller owns the cache: call ``work.unpersist()`` at every exit.
+    The cache lives on the caller's ``scope``: it is released when the
+    caller's ``with`` block exits, normally or by a raise.
     """
     cols = [y.alias("__y__")]
     cols += [c.alias(f"__x{j}__") for j, c in enumerate(feat_cols)]
@@ -169,7 +188,7 @@ def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
     # loop produced, which the frozen golden oracles depend on.  A
     # repartition here once broke gen_goldens' cross-process
     # determinism check (partition count followed defaultParallelism).
-    work = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
+    work = persist(scope, df.select(*cols), StorageLevel.MEMORY_AND_DISK)
     xs = ([F.lit(1.0)] if use_bias else []) \
         + [F.col(f"__x{j}__") for j in range(len(feat_cols))]
     return (work, F.col("__y__"), xs,

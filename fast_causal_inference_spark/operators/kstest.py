@@ -14,12 +14,14 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from contextlib import ExitStack
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import persist
 from fast_causal_inference_spark.serialization import ensure_udf_serializable
 
 
@@ -143,51 +145,54 @@ def kolmogorov_smirnov_test(df: DataFrame, data: str, index: str,
         return pd.DataFrame([{
             "d_statistic": d_stat, "p_value": p_val, "n0": n0, "n1": n1,
         }])
-    rp = sub.repartitionByRange(p, "v").sortWithinPartitions("v").cache()
+    with ExitStack() as scope:
+        rp = persist(scope,
+                     sub.repartitionByRange(p, "v").sortWithinPartitions("v"))
 
-    # pass 1: per-partition per-group counts → prefix offsets
-    counts = rp.selectExpr("spark_partition_id() AS pid", "g") \
-               .groupBy("pid", "g").count().collect()
-    per_pid: dict[int, list[float]] = {}
-    for r in counts:
-        per_pid.setdefault(r["pid"], [0.0, 0.0])[r["g"]] = float(r["count"])
-    n0 = sum(v[0] for v in per_pid.values())
-    n1 = sum(v[1] for v in per_pid.values())
-    if n0 == 0 or n1 == 0:
-        raise ValueError("both groups must be non-empty")
-    offsets: dict[int, tuple[float, float]] = {}
-    c0 = c1 = 0.0
-    for pid in sorted(per_pid):
-        offsets[pid] = (c0, c1)
-        c0 += per_pid[pid][0]
-        c1 += per_pid[pid][1]
+        # pass 1: per-partition per-group counts → prefix offsets
+        counts = rp.selectExpr("spark_partition_id() AS pid", "g") \
+                   .groupBy("pid", "g").count().collect()
+        per_pid: dict[int, list[float]] = {}
+        for r in counts:
+            per_pid.setdefault(r["pid"], [0.0, 0.0])[r["g"]] = \
+                float(r["count"])
+        n0 = sum(v[0] for v in per_pid.values())
+        n1 = sum(v[1] for v in per_pid.values())
+        if n0 == 0 or n1 == 0:
+            raise ValueError("both groups must be non-empty")
+        offsets: dict[int, tuple[float, float]] = {}
+        c0 = c1 = 0.0
+        for pid in sorted(per_pid):
+            offsets[pid] = (c0, c1)
+            c0 += per_pid[pid][0]
+            c1 += per_pid[pid][1]
 
-    def gap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+        def gap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        chunks = list(batches)
-        pdf = pd.concat(chunks) if chunks else None
-        if pdf is None or len(pdf) == 0:
-            yield pd.DataFrame([{"d": 0.0}])
-            return
-        off0, off1 = offsets.get(pid, (0.0, 0.0))
-        grp = pdf.groupby("v", sort=True).agg(t=("g", "size"), g1=("g", "sum"))
-        cum1 = grp["g1"].cumsum().to_numpy(dtype=float) + off1
-        cum0 = (grp["t"].cumsum().to_numpy(dtype=float)
-                - grp["g1"].cumsum().to_numpy(dtype=float)) + off0
-        d = float(abs(cum0 / n0 - cum1 / n1).max())
-        yield pd.DataFrame([{"d": d}])
+            pid = TaskContext.get().partitionId()
+            chunks = list(batches)
+            pdf = pd.concat(chunks) if chunks else None
+            if pdf is None or len(pdf) == 0:
+                yield pd.DataFrame([{"d": 0.0}])
+                return
+            off0, off1 = offsets.get(pid, (0.0, 0.0))
+            grp = pdf.groupby("v", sort=True).agg(t=("g", "size"),
+                                                  g1=("g", "sum"))
+            cum1 = grp["g1"].cumsum().to_numpy(dtype=float) + off1
+            cum0 = (grp["t"].cumsum().to_numpy(dtype=float)
+                    - grp["g1"].cumsum().to_numpy(dtype=float)) + off0
+            d = float(abs(cum0 / n0 - cum1 / n1).max())
+            yield pd.DataFrame([{"d": d}])
 
-    ensure_udf_serializable()
-    d_stat = max(r["d"] for r in rp.mapInPandas(gap, "d double").collect())
+        ensure_udf_serializable()
+        d_stat = max(r["d"] for r in rp.mapInPandas(gap, "d double").collect())
 
-    if mode == "exact" or (mode == "auto" and n0 * n1 <= 4_000_000):
-        nd = rp.agg(F.countDistinct("v").alias("nd")).collect()[0]["nd"]
-        no_ties = float(nd) == n0 + n1
-    else:
-        no_ties = False
-    rp.unpersist()
+        if mode == "exact" or (mode == "auto" and n0 * n1 <= 4_000_000):
+            nd = rp.agg(F.countDistinct("v").alias("nd")).collect()[0]["nd"]
+            no_ties = float(nd) == n0 + n1
+        else:
+            no_ties = False
     use_exact = _gate_exact(mode, n0, n1, no_ties)
     if use_exact:
         p_val = _exact_ks_pvalue(d_stat, int(n0), int(n1))

@@ -16,6 +16,7 @@ per-split jobs; shuffle payload is O(#nodes·#features·#bins) rows of 4 doubles
 from __future__ import annotations
 
 import math
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -24,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import persist
 
 
 @dataclass
@@ -107,101 +109,103 @@ class CausalTree:
                 "__split", (h < int(1000 * self.honesty_fraction)).cast("int"))
         else:
             work = work.withColumn("__split", F.lit(1))
-        work = work.cache()
+        with ExitStack() as scope:
+            work = persist(scope, work)
 
-        # quantile sketch edges — ONE multi-column pass for all features
-        probs = [i / self.n_bins for i in range(1, self.n_bins)]
-        fcols = [f"__feat{i}" for i in range(len(self.features))]
-        qdf = work.select(*[F.expr(f).cast("double").alias(c)
-                            for f, c in zip(self.features, fcols)])
-        for feat, edges in zip(self.features,
-                               qdf.approxQuantile(fcols, probs, 0.001)):
-            self.edges_[feat] = sorted(set(edges))
+            # quantile sketch edges — ONE multi-column pass for all features
+            probs = [i / self.n_bins for i in range(1, self.n_bins)]
+            fcols = [f"__feat{i}" for i in range(len(self.features))]
+            qdf = work.select(*[F.expr(f).cast("double").alias(c)
+                                for f, c in zip(self.features, fcols)])
+            for feat, edges in zip(self.features,
+                                   qdf.approxQuantile(fcols, probs, 0.001)):
+                self.edges_[feat] = sorted(set(edges))
 
-        self.nodes_ = {0: _Node(0, 0)}
-        frontier = [0]
-        next_id = 1
-        for _ in range(self.max_depth):
-            if not frontier:
-                break
-            stats = self._level_stats(work, split_half=1)
-            new_frontier = []
-            for nid in frontier:
-                best = self._best_split(stats, nid)
-                if best is None:
-                    continue
-                feat, thr = best
+            self.nodes_ = {0: _Node(0, 0)}
+            frontier = [0]
+            next_id = 1
+            for _ in range(self.max_depth):
+                if not frontier:
+                    break
+                stats = self._level_stats(work, split_half=1)
+                new_frontier = []
+                for nid in frontier:
+                    best = self._best_split(stats, nid)
+                    if best is None:
+                        continue
+                    feat, thr = best
+                    node = self.nodes_[nid]
+                    node.feature = feat
+                    node.threshold = thr
+                    node.left = next_id
+                    node.right = next_id + 1
+                    self.nodes_[next_id] = _Node(next_id, node.depth + 1)
+                    self.nodes_[next_id + 1] = _Node(next_id + 1,
+                                                     node.depth + 1)
+                    new_frontier += [next_id, next_id + 1]
+                    next_id += 2
+                frontier = new_frontier
+
+            # leaf effects on the estimation half (honest) or everything
+            est_half = 0 if self.honesty else 1
+            eff = (work.where(F.col("__split") == est_half if self.honesty
+                              else F.lit(True))
+                   .withColumn("__node", self._node_column())
+                   .groupBy("__node", "__t")
+                   .agg(F.count(F.lit(1)).alias("n"), F.sum("__y").alias("s"),
+                        F.sum(F.col("__y") * F.col("__y")).alias("s2"))
+                   .collect())
+            per_node: dict[int, dict[int, tuple]] = {}
+            for r in eff:
+                per_node.setdefault(r["__node"], {})[r["__t"]] = (
+                    float(r["n"]), float(r["s"]), float(r["s2"]))
+            # internal nodes carry the SUM of their leaves' moments (the one
+            # leaf-grain aggregation covers every node in the tree by
+            # additivity), so each node — internal or leaf — gets an honest
+            # effect where its accumulated estimation half supports one
+            def _acc(nid: int) -> dict:
                 node = self.nodes_[nid]
-                node.feature = feat
-                node.threshold = thr
-                node.left = next_id
-                node.right = next_id + 1
-                self.nodes_[next_id] = _Node(next_id, node.depth + 1)
-                self.nodes_[next_id + 1] = _Node(next_id + 1, node.depth + 1)
-                new_frontier += [next_id, next_id + 1]
-                next_id += 2
-            frontier = new_frontier
+                if node.left is None:
+                    return per_node.get(nid, {})
+                a, b = _acc(node.left), _acc(node.right)
+                merged = {}
+                for arm in set(a) | set(b):
+                    x = a.get(arm, (0.0, 0.0, 0.0))
+                    z = b.get(arm, (0.0, 0.0, 0.0))
+                    merged[arm] = (x[0] + z[0], x[1] + z[1], x[2] + z[2])
+                per_node[nid] = merged
+                return merged
 
-        # leaf effects on the estimation half (honest) or everything
-        est_half = 0 if self.honesty else 1
-        eff = (work.where(F.col("__split") == est_half if self.honesty
-                          else F.lit(True))
-               .withColumn("__node", self._node_column())
-               .groupBy("__node", "__t")
-               .agg(F.count(F.lit(1)).alias("n"), F.sum("__y").alias("s"),
-                    F.sum(F.col("__y") * F.col("__y")).alias("s2"))
-               .collect())
-        per_node: dict[int, dict[int, tuple]] = {}
-        for r in eff:
-            per_node.setdefault(r["__node"], {})[r["__t"]] = (
-                float(r["n"]), float(r["s"]), float(r["s2"]))
-        # internal nodes carry the SUM of their leaves' moments (the one
-        # leaf-grain aggregation covers every node in the tree by
-        # additivity), so each node — internal or leaf — gets an honest
-        # effect where its accumulated estimation half supports one
-        def _acc(nid: int) -> dict:
-            node = self.nodes_[nid]
-            if node.left is None:
-                return per_node.get(nid, {})
-            a, b = _acc(node.left), _acc(node.right)
-            merged = {}
-            for arm in set(a) | set(b):
-                x = a.get(arm, (0.0, 0.0, 0.0))
-                z = b.get(arm, (0.0, 0.0, 0.0))
-                merged[arm] = (x[0] + z[0], x[1] + z[1], x[2] + z[2])
-            per_node[nid] = merged
-            return merged
-
-        _acc(0)
-        for nid, arms in per_node.items():
-            node = self.nodes_[nid]
-            if 0 in arms and 1 in arms and arms[0][0] > 1 and arms[1][0] > 1:
-                n0, s0, q0 = arms[0]
-                n1, s1, q1 = arms[1]
-                m0, m1 = s0 / n0, s1 / n1
-                v0 = (q0 - n0 * m0 * m0) / (n0 - 1)
-                v1 = (q1 - n1 * m1 * m1) / (n1 - 1)
-                node.tau = m1 - m0
-                node.stderr = math.sqrt(v0 / n0 + v1 / n1)
-                node.n = n0 + n1
-                node.n1 = n1
-        # honest-half fallback: min_node_size is enforced on the SPLIT
-        # half, so by hash luck a leaf's estimation half can lack 2 rows
-        # per arm and its tau stays NaN — predict() would then silently
-        # emit NaN for that whole subpopulation.  Fall back to the
-        # nearest ancestor with a defined effect (the standard honest-
-        # tree remedy: a coarser but valid estimate beats no estimate).
-        def _inherit(nid: int, ptau, pse, pn, pn1):
-            node = self.nodes_[nid]
-            if node.tau is None or node.tau != node.tau:
-                node.tau, node.stderr = ptau, pse
-                node.n, node.n1 = pn, pn1
-            for child in (node.left, node.right):
-                if child is not None:
-                    _inherit(child, node.tau, node.stderr,
-                             node.n, node.n1)
-        _inherit(0, float("nan"), float("nan"), 0.0, 0.0)
-        work.unpersist()
+            _acc(0)
+            for nid, arms in per_node.items():
+                node = self.nodes_[nid]
+                if 0 in arms and 1 in arms and arms[0][0] > 1 \
+                        and arms[1][0] > 1:
+                    n0, s0, q0 = arms[0]
+                    n1, s1, q1 = arms[1]
+                    m0, m1 = s0 / n0, s1 / n1
+                    v0 = (q0 - n0 * m0 * m0) / (n0 - 1)
+                    v1 = (q1 - n1 * m1 * m1) / (n1 - 1)
+                    node.tau = m1 - m0
+                    node.stderr = math.sqrt(v0 / n0 + v1 / n1)
+                    node.n = n0 + n1
+                    node.n1 = n1
+            # honest-half fallback: min_node_size is enforced on the SPLIT
+            # half, so by hash luck a leaf's estimation half can lack 2 rows
+            # per arm and its tau stays NaN — predict() would then silently
+            # emit NaN for that whole subpopulation.  Fall back to the
+            # nearest ancestor with a defined effect (the standard honest-
+            # tree remedy: a coarser but valid estimate beats no estimate).
+            def _inherit(nid: int, ptau, pse, pn, pn1):
+                node = self.nodes_[nid]
+                if node.tau is None or node.tau != node.tau:
+                    node.tau, node.stderr = ptau, pse
+                    node.n, node.n1 = pn, pn1
+                for child in (node.left, node.right):
+                    if child is not None:
+                        _inherit(child, node.tau, node.stderr,
+                                 node.n, node.n1)
+            _inherit(0, float("nan"), float("nan"), 0.0, 0.0)
         return self
 
     def _level_stats(self, work: DataFrame, split_half: int) -> pd.DataFrame:
