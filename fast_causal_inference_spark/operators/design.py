@@ -21,12 +21,25 @@ Cache lifetime: a function that caches opens one
 which registers the frame's ``unpersist`` on that scope.  The cache is
 released where the ``with`` block ends, on a normal and on a raising
 exit alike; the block ends after the function's last scan of it.
+
+Fisher scoring: :func:`fisher_scoring` is the one place that builds and
+solves the IRLS Gramian for ``glm``, the binomial and negative-binomial
+fits and ``logistic_regression`` — each IRLS step is one aggregation of
+Σ w·xᵢ·z, Σ w·xᵢ·xⱼ (i ≤ j) and the row count over the persisted
+design (or its numpy twin on a collected design), then a driver-side
+solve.  :func:`irls_design` is the prelude those fits share; a family
+brings only its y-range check, its start β and its per-row (w, z)
+algebra.  ``glm_grouped`` keeps its own per-segment loop but builds and
+unpacks its grouped scan with :func:`gramian_aggs` /
+:func:`gramian_unpack`.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from contextlib import ExitStack
+from typing import NamedTuple
 
 import numpy as np
 from pyspark import StorageLevel
@@ -34,7 +47,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["persist", "persist_design", "collect_small_design",
-           "collect_columns", "small_design_limit", "SMALL_DESIGN_MAX_ROWS"]
+           "collect_columns", "small_design_limit", "SMALL_DESIGN_MAX_ROWS",
+           "IrlsDesign", "irls_design", "fisher_scoring", "gramian_aggs",
+           "gramian_unpack", "linear_predictor"]
 
 
 def persist(scope: ExitStack, df: DataFrame,
@@ -193,3 +208,151 @@ def persist_design(scope: ExitStack, df: DataFrame, y: Column,
         + [F.col(f"__x{j}__") for j in range(len(feat_cols))]
     return (work, F.col("__y__"), xs,
             F.col("__off__") if off is not None else F.lit(0.0))
+
+
+class IrlsDesign(NamedTuple):
+    """A persisted complete-case design, as :func:`irls_design` returns
+    it: the relation and its columns rebased onto it, the collected
+    ``(X, y, off)`` arrays below the small-design cutoff (else None),
+    and the init scan's mean/min/max of y."""
+    df: DataFrame
+    y: Column
+    xs: list[Column]
+    off: Column
+    des: tuple[np.ndarray, np.ndarray, np.ndarray] | None
+    mean: float
+    lo: float
+    hi: float
+
+    def intercept_only(self) -> IrlsDesign:
+        """The same rows with the design cut to the bias column — the
+        null model of a fit with an offset."""
+        des = None if self.des is None else \
+            (np.ones((len(self.des[1]), 1)), self.des[1], self.des[2])
+        return self._replace(xs=[F.lit(1.0)], des=des)
+
+
+def irls_design(scope: ExitStack, df: DataFrame, y_expr: str,
+                feats: list[str], offset: str | None = None,
+                use_bias: bool = True) -> IrlsDesign:
+    """Prelude of the Fisher-scoring fits: keep the complete cases,
+    persist the projected design on ``scope`` (:func:`persist_design`),
+    run ONE init scan of count / avg / min / max of y — it also
+    materializes the cache — and collect the design when it is small
+    (:func:`collect_small_design`).  Raises on an input with no
+    complete row."""
+    y = F.expr(y_expr).cast("double")
+    x = [F.expr(e).cast("double") for e in feats]
+    off = F.expr(offset).cast("double") if offset is not None else None
+    # complete-case filter: a NULL-y (or NULL-feature/offset) row would
+    # otherwise enter the y-free Gramian sums but not the y-bearing ones,
+    # silently biasing the solve
+    cc = y.isNotNull() if off is None else y.isNotNull() & off.isNotNull()
+    for c in x:
+        cc = cc & c.isNotNull()
+    df, y, xs, off = persist_design(scope, df.where(cc), y, x, off=off,
+                                    use_bias=use_bias)
+    init = df.agg(F.count(F.lit(1)).alias("n"), F.avg(y).alias("m"),
+                  F.min(y).alias("lo"), F.max(y).alias("hi")).collect()[0]
+    if init["m"] is None:
+        raise ValueError("no non-NULL outcome rows")
+    des, df = collect_small_design(scope, df, xs, y, off,
+                                   n_rows=int(init["n"]))
+    return IrlsDesign(df, y, xs, off, des, float(init["m"]),
+                      float(init["lo"]), float(init["hi"]))
+
+
+def linear_predictor(beta: np.ndarray, xs: list[Column],
+                     off: Column) -> Column:
+    """η = Σ βⱼ·xⱼ + off as one Column, summed left to right."""
+    eta: Column = F.lit(float(beta[0])) * xs[0]
+    for j in range(1, len(xs)):
+        eta = eta + F.lit(float(beta[j])) * xs[j]
+    return eta + off
+
+
+def gramian_aggs(ps: list[Column], w: Column, z: Column | None,
+                 y: Column) -> list[Column]:
+    """Aggregates of one weighted Gramian: Σ w·xᵢ·z as ``b{i}`` (left
+    out when ``z`` is None), Σ w·xᵢ·xⱼ for i ≤ j as ``a{i}_{j}`` and
+    count(y) as ``n__``.  Usable under ``agg`` and ``groupBy().agg``."""
+    aggs = []
+    for i in range(len(ps)):
+        if z is not None:
+            aggs.append(F.sum(w * ps[i] * z).alias(f"b{i}"))
+        for j in range(i, len(ps)):
+            aggs.append(F.sum(w * ps[i] * ps[j]).alias(f"a{i}_{j}"))
+    aggs.append(F.count(y).alias("n__"))
+    return aggs
+
+
+def gramian_unpack(row, p: int) -> tuple[np.ndarray, np.ndarray | None,
+                                         float]:
+    """``(A, b, n)`` from one :func:`gramian_aggs` row; ``b`` is None
+    when the row carries no z sums."""
+    d = row.asDict()
+    A = np.empty((p, p))
+    for i in range(p):
+        for j in range(i, p):
+            A[i, j] = A[j, i] = d[f"a{i}_{j}"]
+    b = np.array([d[f"b{i}"] for i in range(p)], dtype=float) \
+        if "b0" in d else None
+    return A, b, float(d["n__"])
+
+
+def _gramian_scan(d: IrlsDesign, beta: np.ndarray, wz: Callable,
+                  ) -> tuple[np.ndarray, np.ndarray, float]:
+    """One distributed Fisher step: staged Projects (η; the family's μ
+    stage; w and z), then one aggregation of the weighted Gramian."""
+    p = len(d.xs)
+    base = d.df.select(*[c.alias(f"__p{i}__") for i, c in enumerate(d.xs)],
+                       d.y.alias("__yy__"),
+                       linear_predictor(beta, d.xs, d.off).alias("__eta__"),
+                       d.off.alias("__o__"))
+    mid, w, z = wz(base, F.col("__eta__"), F.col("__yy__"), F.col("__o__"))
+    ps = [F.col(f"__p{i}__") for i in range(p)]
+    step = mid.select(*ps, w.alias("__w__"), z.alias("__z__"),
+                      F.col("__yy__"))
+    row = step.agg(*gramian_aggs(ps, F.col("__w__"), F.col("__z__"),
+                                 F.col("__yy__"))).collect()[0]
+    return gramian_unpack(row, p)
+
+
+def fisher_scoring(d: IrlsDesign, beta: np.ndarray, wz: Callable,
+                   wz_np: Callable, max_iter: int, tol: float,
+                   ) -> tuple[np.ndarray, np.ndarray, float, int, bool]:
+    """IRLS from ``beta`` until ``max|Δβ| < tol`` or ``max_iter`` steps.
+
+    Each step builds A = Σ w·xxᵀ, b = Σ w·x·z and n — one Spark
+    aggregation over the persisted design, or ``(X·w)ᵀX`` and ``Xᵀ(w·z)``
+    in numpy when the design was collected — and solves Aβ = b on the
+    driver.  Returns ``(beta, A, n, iterations, converged)``; A is the
+    Fisher information of the last step (the identity and n = 0 when
+    ``max_iter < 1``).
+
+    The family's per-row algebra comes twice.  ``wz(base, eta, y, off)
+    -> (frame, w, z)``: ``base`` carries the design columns, y, η and the
+    offset; the builder may stage μ (or μ and dμ/dη) in one more Project
+    over it so exp/erf run once per row, and returns that frame with w
+    and z as Columns over it.  ``wz_np(eta, y, off) -> (w, z)`` is its
+    twin on the collected arrays, with the same float operations in the
+    same order."""
+    A = np.eye(len(d.xs))
+    n = 0.0
+    it = 0
+    converged = False
+    for it in range(1, max_iter + 1):
+        if d.des is not None:
+            X, yv, ov = d.des
+            eta = X @ beta + ov
+            w, z = wz_np(eta, yv, ov)
+            A, b, n = (X * w[:, None]).T @ X, X.T @ (w * z), float(len(yv))
+        else:
+            A, b, n = _gramian_scan(d, beta, wz)
+        new_beta = np.linalg.solve(A, b)
+        delta = float(np.max(np.abs(new_beta - beta)))
+        beta = new_beta
+        if delta < tol:
+            converged = True
+            break
+    return beta, A, n, it, converged

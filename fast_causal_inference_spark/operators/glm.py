@@ -9,12 +9,16 @@ style strictly-positive skewed outcomes, log link), and gaussian
 (identity link — one iteration, equals OLS; included so family is a
 config knob, not a code path).
 
-Same execution shape as ``logistic.py``: each IRLS iteration is ONE
-aggregation of the weighted Gramian Σ s·xxᵀ and Σ s·x·z (p(p+3)/2
-doubles shuffled, map-side combined), solved on the driver.  Row-scale
-arithmetic stays in whole-stage codegen; nothing iterates over rows in
-Python.  At 100 TB each iteration is a single scan — for k features the
-network cost is O(k²) per iteration regardless of row count.
+Every fit here except :func:`glm_grouped` iterates through the one
+Fisher-scoring loop, ``design.fisher_scoring`` (which
+``logistic_regression`` also calls): each IRLS iteration is ONE
+aggregation of the weighted Gramian Σ w·xxᵀ and Σ w·x·z (p(p+3)/2
+doubles shuffled, map-side combined), solved on the driver.  A family
+contributes only its y-range check, its start β and its per-row (w, z)
+algebra, as a Column builder and its numpy twin.  Row-scale arithmetic
+stays in whole-stage codegen; nothing iterates over rows in Python.  At
+100 TB each iteration is a single scan — for k features the network
+cost is O(k²) per iteration regardless of row count.
 """
 
 from __future__ import annotations
@@ -29,9 +33,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.operators.design import (
-    collect_small_design,
+    fisher_scoring,
+    gramian_aggs,
+    gramian_unpack,
+    irls_design,
+    linear_predictor,
     persist,
-    persist_design,
 )
 
 
@@ -132,11 +139,12 @@ _FAMILIES = ("poisson", "quasipoisson", "gamma", "gaussian", "binomial",
 
 def _irls_wz(family: str, mu: Column, etac: Column, yc: Column,
              offc: Column, var_power: float) -> tuple[Column, Column]:
-    """(IRLS weight, working response) Columns for one Fisher step.
+    """(IRLS weight, working response) Columns for one Fisher step at μ.
 
-    Shared by :func:`glm` and :func:`glm_grouped` (log / identity /
-    canonical-logit links — ``_binomial_glm`` keeps its own chain for
-    the non-canonical probit/cloglog links).  The working response
+    The log / identity / canonical-logit algebra that :func:`irls_family`
+    hands to :func:`glm`, :func:`glm_grouped` and
+    ``logistic_regression``; ``_binomial_glm`` brings its own (w, z)
+    for the non-canonical probit/cloglog links.  The working response
     divides by dμ/dη — which only coincides with the weight for the
     canonical poisson/logit cases."""
     if family == "gaussian":
@@ -181,6 +189,33 @@ def _irls_wz_np(family: str, mu: np.ndarray, eta: np.ndarray,
         dmu = mu
     z = (eta - off) + (y - mu) / dmu
     return s, z
+
+
+def irls_family(family: str, var_power: float = 1.5):
+    """``(wz, wz_np)`` of ``family`` for ``design.fisher_scoring``: μ is
+    exp(η) (log link), η (gaussian) or the logistic sigmoid (binomial,
+    canonical logit), then :func:`_irls_wz` / :func:`_irls_wz_np`.  The
+    Column builder stages μ in its own Project — it is referenced three
+    times by w and z, and CollapseProject leaves a multi-referenced
+    non-cheap alias in place — so exp() runs once per row."""
+    def wz(base: DataFrame, eta: Column, y: Column, off: Column):
+        if family == "gaussian":
+            mid, mu = base, eta
+        else:
+            mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta)) \
+                if family == "binomial" else F.exp(eta)
+            mid, mu = base.select("*", mu.alias("__mu__")), F.col("__mu__")
+        return (mid, *_irls_wz(family, mu, eta, y, off, var_power))
+
+    def wz_np(eta: np.ndarray, y: np.ndarray, off: np.ndarray):
+        if family == "gaussian":
+            mu = eta
+        elif family == "binomial":
+            mu = 1.0 / (1.0 + np.exp(-eta))
+        else:
+            mu = np.exp(eta)
+        return _irls_wz_np(family, mu, eta, y, off, var_power)
+    return wz, wz_np
 
 
 def _dev_pearson(family: str, y: Column, mu: Column,
@@ -269,143 +304,41 @@ def glm(df: DataFrame, formula: str, family: str = "poisson",
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
-    k = len(feats)
-    p = k + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    # complete-case filter: a NULL-y (or NULL-feature) row would otherwise
-    # enter the y-free Gramian sums but not the y-bearing ones, silently
-    # biasing the solve
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
+    p = len(feats) + (1 if use_bias else 0)
     log_link = family != "gaussian"
     with ExitStack() as scope:
-        # persist the projected design for the IRLS loop (design.py) — the
-        # m0 scan below doubles as its materialization
-        df, y, xs, off = persist_design(
-            scope, df, y, xs[1:] if use_bias else xs,
-            off=F.expr(offset).cast("double") if offset is not None else None,
-            use_bias=use_bias)
-
+        # complete cases, persisted design, one init scan, collected when
+        # small (design.irls_design)
+        d = irls_design(scope, df, y_expr, feats, offset, use_bias)
+        df, y, xs, off = d.df, d.y, d.xs, d.off
+        if family == "gamma" and d.lo <= 0:
+            raise ValueError("gamma family needs strictly positive y")
+        if family in ("poisson", "quasipoisson", "tweedie") and d.lo < 0:
+            raise ValueError(f"{family} family needs non-negative y")
         beta = np.zeros(p)
-        n0 = None
-        if log_link:
-            # start eta at log(mean(y)) via the intercept when present —
-            # exp(0)=1 is a poor start for large counts; the scan also
-            # materializes the persisted design and yields the row count the
-            # small-design gate needs (saves its count job)
-            m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                        F.count(F.lit(1)).alias("n")).collect()[0]
-            n0 = int(m0["n"])
-            if m0["m"] is None:
-                raise ValueError("no non-NULL outcome rows")
-            if family == "gamma" and float(m0["lo"]) <= 0:
-                raise ValueError("gamma family needs strictly positive y")
-            if family in ("poisson", "quasipoisson", "tweedie") \
-                    and float(m0["lo"]) < 0:
-                raise ValueError(f"{family} family needs non-negative y")
-            if use_bias and float(m0["m"]) > 0:
-                beta[0] = math.log(float(m0["m"]))
-
-        # small-input fast path (round 11, see design.collect_small_design):
-        # collect the persisted design ONCE and run the iterations in numpy
-        # — identical per-row algebra, one Spark job instead of one per step;
-        # a big design comes back spread across cores for the IRLS loop
-        if n0 is None:
-            n0 = int(df.count())
-        des, df = collect_small_design(scope, df, xs, y, off, n_rows=n0)
-
-        def _sums_np(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                                float]:
-            Xd, yv, ov = des
-            eta_v = Xd @ beta + ov
-            mu_v = np.exp(eta_v) if log_link else eta_v
-            w_v, z_v = _irls_wz_np(family, mu_v, eta_v, yv, ov, var_power)
-            Xw = Xd * w_v[:, None]
-            return Xw.T @ Xd, Xd.T @ (w_v * z_v), float(len(yv))
-
-        def _sums_spark(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                                   float]:
-            eta: Column = F.lit(float(beta[0])) * xs[0]
-            for j in range(1, p):
-                eta = eta + F.lit(float(beta[j])) * xs[j]
-            eta = eta + off
-            # two-stage projection: materialize η, then μ = exp(η), then the
-            # per-row w/z.  μ is referenced three times downstream; staged
-            # Projects keep exp() evaluated once per row (CollapseProject
-            # leaves multi-referenced non-cheap aliases in place), and the
-            # per-row arithmetic — hence every float sum — is bit-identical
-            # to the inlined form
-            base = df.select(*[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-                             y.alias("__yy__"), eta.alias("__eta__"),
-                             off.alias("__o__"))
-            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-            if not log_link:                      # gaussian/identity: one shot
-                mu = etac
-                mid = base
-            else:
-                mid = base.select("*", F.exp(etac).alias("__mu__"))
-                mu = F.col("__mu__")
-            # weight + working response on the X-only predictor (offset is
-            # fixed) — shared per-family algebra (_irls_wz)
-            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-            step = mid.select(*[F.col(f"__p{i}__") for i in range(p)],
-                              s.alias("__w__"), z.alias("__z__"),
-                              F.col("__yy__"))
-            ps = [F.col(f"__p{i}__") for i in range(p)]
-            sc, zc = F.col("__w__"), F.col("__z__")
-            aggs = []
-            for i in range(p):
-                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-            aggs.append(F.count(F.col("__yy__")).alias("n__"))
-            row = step.agg(*aggs).collect()[0]
-            A = np.empty((p, p))
-            b = np.empty(p)
-            for i in range(p):
-                b[i] = row[f"b{i}"]
-                for j in range(i, p):
-                    A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-            return A, b, float(row["n__"])
-
-        sums = _sums_np if des is not None else _sums_spark
-        n = 0.0
-        converged = False
-        it = 0
-        A = np.eye(p)
-        for it in range(1, max_iter + 1):
-            A, b, n = sums(beta)
-            new_beta = np.linalg.solve(A, b)
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if delta < tol or not log_link:
-                converged = True
-                break
+        # start eta at log(mean(y)) via the intercept when present —
+        # exp(0)=1 is a poor start for large counts
+        if log_link and use_bias and d.mean > 0:
+            beta[0] = math.log(d.mean)
+        # the identity link's first weighted least-squares step is exact
+        beta, A, n, it, converged = fisher_scoring(
+            d, beta, *irls_family(family, var_power),
+            max_iter if log_link else min(max_iter, 1), tol)
+        converged = converged or (it == 1 and not log_link)
 
         # final-fit scalars: deviance, null deviance, Pearson dispersion —
         # ONE more scan
-        eta = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            eta = eta + F.lit(float(beta[j])) * xs[j]
-        eta = eta + off
+        eta = linear_predictor(beta, xs, off)
         if not compute_stats:
             # nuisance-fit fast path: no deviance scans; dispersion-scaled
             # families still need the Pearson χ² for their SEs (one reduced
             # aggregation), the rest skip the pass entirely
-            df_p = df
             dispersion = 1.0
             cov = np.linalg.inv(A)
             if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
                 mu_f = eta if family == "gaussian" else F.exp(eta)
                 pearson_f = _dev_pearson(family, y, mu_f, var_power)[1]
-                pchi = float(df_p.agg(F.sum(pearson_f).alias("p"))
+                pchi = float(df.agg(F.sum(pearson_f).alias("p"))
                              .collect()[0]["p"])
                 dispersion = pchi / max(n - p, 1.0)
                 cov = cov * dispersion
@@ -555,8 +488,6 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
     y_expr, feats = parse_r_formula(formula)
     k = len(feats)
     p = k + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
     y = F.expr(y_expr).cast("double")
     off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
     cc = y.isNotNull() & off.isNotNull()
@@ -639,6 +570,7 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
                 eta = eta + F.col(f"__b{j}__") * xs[j]
             return eta + off
 
+        wz = irls_family(family, var_power)[0]
         n_by_g: dict = {}
         iters_by_g: dict = {g: 0 for g in betas}
         frozen: set = set()             # segments already at their fixed point
@@ -658,43 +590,19 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
                 "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
                 y.alias("__yy__"), _eta().alias("__eta__"),
                 off.alias("__o__"))
-            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-            if family == "gaussian":
-                mu = etac
-                mid = base
-            elif family == "binomial":
-                mid = base.select(
-                    "*", (F.lit(1.0) / (F.lit(1.0) + F.exp(-etac)))
-                    .alias("__mu__"))
-                mu = F.col("__mu__")
-            else:
-                mid = base.select("*", F.exp(etac).alias("__mu__"))
-                mu = F.col("__mu__")
-            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-            step = mid.select("__g__",
-                              *[F.col(f"__p{i}__") for i in range(p)],
-                              s.alias("__w__"), z.alias("__z__"),
-                              F.col("__yy__"))
+            mid, s, z = wz(base, F.col("__eta__"), F.col("__yy__"),
+                           F.col("__o__"))
             ps = [F.col(f"__p{i}__") for i in range(p)]
-            sc, zc = F.col("__w__"), F.col("__z__")
-            aggs = []
-            for i in range(p):
-                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-            aggs.append(F.count(F.col("__yy__")).alias("n__"))
-            rows = step.groupBy("__g__").agg(*aggs).collect()
+            step = mid.select("__g__", *ps, s.alias("__w__"),
+                              z.alias("__z__"), F.col("__yy__"))
+            rows = step.groupBy("__g__").agg(*gramian_aggs(
+                ps, F.col("__w__"), F.col("__z__"), F.col("__yy__"))
+            ).collect()
             delta_max = 0.0
             A_by_g: dict = {}
             for r in rows:
                 gv = _norm(r["__g__"])
-                n_by_g[gv] = float(r["n__"])
-                A = np.empty((p, p))
-                b = np.empty(p)
-                for i in range(p):
-                    b[i] = r[f"b{i}"]
-                    for j in range(i, p):
-                        A[i, j] = A[j, i] = r[f"a{i}_{j}"]
+                A, b, n_by_g[gv] = gramian_unpack(r, p)
                 A_by_g[gv] = A
                 if gv in frozen:
                     continue
@@ -743,28 +651,19 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
         s_fin, _zf = _irls_wz(family, mu, F.col("__eta__"), yc,
                               F.col("__o__"), var_power)
         psf = [F.col(f"__p{i}__") for i in range(p)]
-        fin_aggs = [F.sum(dev_term).alias("dev"),
-                    F.sum(pearson).alias("pchi"),
-                    F.count(F.col("__yy__")).alias("n__")]
-        for i in range(p):
-            for j in range(i, p):
-                fin_aggs.append(F.sum(s_fin * psf[i] * psf[j])
-                                .alias(f"fa{i}_{j}"))
-        fin_rows = fb.groupBy("__g__").agg(*fin_aggs).collect()
+        fin_rows = fb.groupBy("__g__").agg(
+            F.sum(dev_term).alias("dev"), F.sum(pearson).alias("pchi"),
+            *gramian_aggs(psf, s_fin, None, yc)).collect()
     fin = {_norm(r["__g__"]): r for r in fin_rows}
 
     out: dict = {}
     scaled = family in ("quasipoisson", "gamma", "gaussian", "tweedie")
     for gv, beta in betas.items():
         fr = fin.get(gv)
-        n = float(fr["n__"]) if fr is not None else n_by_g.get(gv, 0.0)
         if fr is not None:
-            A = np.empty((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    A[i, j] = A[j, i] = fr[f"fa{i}_{j}"]
+            A, _, n = gramian_unpack(fr, p)
         else:
-            A = A_by_g.get(gv)
+            A, n = A_by_g.get(gv), n_by_g.get(gv, 0.0)
         try:
             cov = np.linalg.inv(A)
         except np.linalg.LinAlgError:
@@ -806,9 +705,10 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
     """Binomial GLM by Fisher scoring for logit / probit / cloglog links.
 
     Non-canonical links change only the per-row weight w = (dμ/dη)²/V(μ)
-    and working response z = η + (y−μ)/(dμ/dη); the distributed shape is
-    identical to :func:`glm` — one O(p²) Gramian aggregation per
-    iteration, solved on the driver.  Probit's Φ uses the package's
+    and working response z = η + (y−μ)/(dμ/dη), which this function hands
+    to the shared loop (``design.fisher_scoring``) as a Column builder
+    and its numpy twin; the fit, and the intercept-only null model under
+    an offset, are two calls of that loop.  Probit's Φ uses the package's
     exact-double Arrow ``erf`` (``functions/__init__.py:256``); all other
     arithmetic is pure Column.  Accepts binary {0,1} or proportion [0,1]
     outcomes (proportions get the standard quasi-binomial deviance
@@ -820,16 +720,6 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
 
     y_expr, feats = parse_r_formula(formula)
     p = len(feats) + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
     EPS = 1e-10
 
     def _mu_dmu(eta: Column) -> tuple[Column, Column]:
@@ -867,114 +757,36 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
         ex = np.exp(eta)
         return 1.0 - np.exp(-ex), ex * np.exp(-ex)
 
+    def _wz(base: DataFrame, eta: Column, y: Column, off: Column):
+        # staged Projects: μ/dμ once (the probit erf chain is referenced
+        # three times by w/z — CollapseProject keeps multi-referenced
+        # non-cheap aliases materialized), then w/z
+        mu, dmu = _mu_dmu(eta)
+        mid = base.select("*", mu.alias("__mu__"),
+                          (dmu + F.lit(EPS)).alias("__dmu__"))
+        muc, dmuc = F.col("__mu__"), F.col("__dmu__")
+        return (mid, dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS)),
+                (eta - off) + (y - muc) / dmuc)
+
+    def _wz_np(eta: np.ndarray, y: np.ndarray, off: np.ndarray):
+        mu, dmu = _mu_dmu_np(eta)
+        dmu = dmu + EPS
+        return (dmu * dmu / (mu * (1.0 - mu) + EPS),
+                (eta - off) + (y - mu) / dmu)
+
     def _dev_term(mu: Column) -> Column:
         # shared clamped binomial unit deviance (_dev_pearson)
         return _dev_pearson("binomial", y, mu, var_power=1.5)[0]
 
     with ExitStack() as scope:
-        # persist the projected design for the Fisher-scoring loop
-        # (design.py); the small-design count gate doubles as its
-        # materialization
-        df, y, xs, off = persist_design(
-            scope, df, y, xs[1:] if use_bias else xs,
-            off=F.expr(offset).cast("double") if offset is not None else None,
-            use_bias=use_bias)
-        # small-input fast path (round 11, design.collect_small_design):
-        # iterate driver-side in numpy off one collected design
-        _nb = int(df.count())
-        des, df = collect_small_design(scope, df, xs, y, off, n_rows=_nb)
-
-        def _irls(beta: np.ndarray, cols: list[Column], pp: int,
-                  validate: bool = False,
-                  np_design: tuple | None = None,
-                  ) -> tuple[np.ndarray, np.ndarray, float, int, bool]:
-            A = np.eye(pp)
-            n = 0.0
-            it = 0
-            conv = False
-            if np_design is not None and validate:
-                _, yv0, _ = np_design
-                if len(yv0) == 0:
-                    raise ValueError("no non-NULL outcome rows")
-                if yv0.min() < 0 or yv0.max() > 1:
-                    raise ValueError("binomial family needs y in [0, 1]")
-            for it in range(1, max_iter + 1):
-                if np_design is not None:
-                    X_, yv, ov = np_design
-                    eta_v = X_ @ beta + ov
-                    mu_v, dmu_v = _mu_dmu_np(eta_v)
-                    dmu_v = dmu_v + EPS
-                    w_v = dmu_v * dmu_v / (mu_v * (1.0 - mu_v) + EPS)
-                    z_v = (eta_v - ov) + (yv - mu_v) / dmu_v
-                    Xw = X_ * w_v[:, None]
-                    A = Xw.T @ X_
-                    b = X_.T @ (w_v * z_v)
-                    n = float(len(yv))
-                else:
-                    eta: Column = F.lit(float(beta[0])) * cols[0]
-                    for j in range(1, pp):
-                        eta = eta + F.lit(float(beta[j])) * cols[j]
-                    eta = eta + off
-                    # staged Projects: η once, then μ/dμ once (the probit
-                    # erf chain is referenced three times by w/z —
-                    # CollapseProject keeps multi-referenced non-cheap
-                    # aliases materialized), then w/z.  Per-row arithmetic
-                    # — hence every float sum — is bit-identical to the
-                    # inlined form.
-                    base = df.select(*[c.alias(f"__p{i}__")
-                                       for i, c in enumerate(cols)],
-                                     y.alias("__yy__"), eta.alias("__eta__"),
-                                     off.alias("__o__"))
-                    etac, yc = F.col("__eta__"), F.col("__yy__")
-                    mu, dmu = _mu_dmu(etac)
-                    mid = base.select("*", mu.alias("__mu__"),
-                                      (dmu + F.lit(EPS)).alias("__dmu__"))
-                    muc, dmuc = F.col("__mu__"), F.col("__dmu__")
-                    w = dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS))
-                    z = (etac - F.col("__o__")) + (yc - muc) / dmuc
-                    step = mid.select(*[F.col(f"__p{i}__")
-                                        for i in range(pp)],
-                                      w.alias("__w__"), z.alias("__z__"),
-                                      F.col("__yy__"))
-                    ps = [F.col(f"__p{i}__") for i in range(pp)]
-                    wc, zc = F.col("__w__"), F.col("__z__")
-                    aggs = []
-                    for i in range(pp):
-                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                        for j in range(i, pp):
-                            aggs.append(F.sum(wc * ps[i] * ps[j])
-                                        .alias(f"a{i}_{j}"))
-                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                    if validate and it == 1:
-                        # fold the input-validation scan into the first
-                        # iteration's aggregation (saves a full pass)
-                        aggs += [F.avg(F.col("__yy__")).alias("m0__"),
-                                 F.min(F.col("__yy__")).alias("lo__"),
-                                 F.max(F.col("__yy__")).alias("hi__")]
-                    row = step.agg(*aggs).collect()[0]
-                    if validate and it == 1:
-                        if row["m0__"] is None:
-                            raise ValueError("no non-NULL outcome rows")
-                        if float(row["lo__"]) < 0 or float(row["hi__"]) > 1:
-                            raise ValueError(
-                                "binomial family needs y in [0, 1]")
-                    n = float(row["n__"])
-                    A = np.empty((pp, pp))
-                    b = np.empty(pp)
-                    for i in range(pp):
-                        b[i] = row[f"b{i}"]
-                        for j in range(i, pp):
-                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-                new_beta = np.linalg.solve(A, b)
-                delta = float(np.max(np.abs(new_beta - beta)))
-                beta = new_beta
-                if delta < tol:
-                    conv = True
-                    break
-            return beta, A, n, it, conv
-
-        beta, A, n, it, converged = _irls(np.zeros(p), xs, p, validate=True,
-                                          np_design=des)
+        # complete cases, persisted design, one init scan, collected when
+        # small (design.irls_design)
+        d = irls_design(scope, df, y_expr, feats, offset, use_bias)
+        df, y, xs, off = d.df, d.y, d.xs, d.off
+        if d.lo < 0 or d.hi > 1:
+            raise ValueError("binomial family needs y in [0, 1]")
+        beta, A, n, it, converged = fisher_scoring(
+            d, np.zeros(p), _wz, _wz_np, max_iter, tol)
 
         if not compute_stats:
             # nuisance-fit fast path (see glm()): beta/stderr only, no
@@ -987,10 +799,7 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
                             null_deviance=float("nan"), dispersion=1.0,
                             offset=offset, y_expr=y_expr, link=link)
 
-        eta = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            eta = eta + F.lit(float(beta[j])) * xs[j]
-        mu_fit, _ = _mu_dmu(eta + off)
+        mu_fit, _ = _mu_dmu(linear_predictor(beta, xs, off))
         fin = df.agg(F.sum(_dev_term(mu_fit)).alias("dev"),
                      F.avg(y).alias("ybar")).collect()[0]
         deviance = float(fin["dev"])
@@ -1004,10 +813,8 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
         elif use_bias:
             # intercept-only + fixed offset: no closed form — reuse the
             # Fisher loop at p=1 (a handful of tiny scans), then one scan
-            des0 = None if des is None else \
-                (np.ones((len(des[1]), 1)), des[1], des[2])
-            b0, _, _, _, _ = _irls(np.zeros(1), [F.lit(1.0)], 1,
-                                   np_design=des0)
+            b0 = fisher_scoring(d.intercept_only(), np.zeros(1), _wz,
+                                _wz_np, max_iter, tol)[0]
             mu0, _ = _mu_dmu(F.lit(float(b0[0])) + off)
             null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
                              .collect()[0]["nd"])
@@ -1038,110 +845,50 @@ def negative_binomial_regression(df: DataFrame, formula: str,
     standard two-step moment estimator — a digamma ML solve for α is
     deliberately out of scope).
 
-    Execution shape matches :func:`glm`: every IRLS iteration and every
-    α update is ONE Gramian-or-two-sums aggregation; nothing touches
-    rows driver-side.  SEs are the conditional-on-α Fisher inverse.
+    The Poisson first stage, every α round, a fixed α and the
+    intercept-only null model are calls of the shared Fisher-scoring
+    loop (``design.fisher_scoring``) with the NB2 weights at that α;
+    every α update is one two-sums aggregation.  SEs are the
+    conditional-on-α Fisher inverse.
     """
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
+    if alpha is not None and alpha < 0:
+        raise ValueError("alpha must be >= 0")
     y_expr, feats = parse_r_formula(formula)
     p = len(feats) + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
-    with ExitStack() as scope:
-        # persist the projected design for the IRLS + alpha rounds
-        # (design.py); the m0 scan below doubles as its materialization
-        df, y, xs, off = persist_design(
-            scope, df, y, xs[1:] if use_bias else xs,
-            off=F.expr(offset).cast("double") if offset is not None else None,
-            use_bias=use_bias)
 
-        m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                    F.count(F.lit(1)).alias("n")).collect()[0]
-        if m0["m"] is None:
-            raise ValueError("no non-NULL outcome rows")
-        if float(m0["lo"]) < 0:
+    def _nb2(a: float):
+        """NB2 (w, z) at dispersion ``a``: w = μ/(1+aμ), z = η − off +
+        (y−μ)/μ, each with its ε = 1e-10; μ = exp(η) staged once."""
+        def wz(base: DataFrame, eta: Column, y: Column, off: Column):
+            mid = base.select("*", F.exp(eta).alias("__mu__"))
+            mu = F.col("__mu__")
+            return (mid, mu / (1 + F.lit(a) * mu) + F.lit(1e-10),
+                    (eta - off) + (y - mu) / (mu + F.lit(1e-10)))
+
+        def wz_np(eta: np.ndarray, y: np.ndarray, off: np.ndarray):
+            mu = np.exp(eta)
+            return (mu / (1 + a * mu) + 1e-10,
+                    (eta - off) + (y - mu) / (mu + 1e-10))
+        return wz, wz_np
+
+    with ExitStack() as scope:
+        # complete cases, persisted design, one init scan, collected when
+        # small (design.irls_design) — the α-round structure multiplies
+        # the per-step job cost (outer dispersion rounds × inner IRLS), so
+        # the collected path pays off more here than anywhere else
+        d = irls_design(scope, df, y_expr, feats, offset, use_bias)
+        df, y, xs, off, des = d.df, d.y, d.xs, d.off, d.des
+        if d.lo < 0:
             raise ValueError("negative-binomial family needs non-negative y")
 
-        # small-input fast path (round 11, design.collect_small_design):
-        # the α-round structure multiplies the per-step job cost (outer
-        # dispersion rounds × inner IRLS), so the collected path pays off
-        # more here than anywhere else in the GLM zoo
-        des, df = collect_small_design(scope, df, xs, y, off,
-                                       n_rows=int(m0["n"]))
-
-        def _eta(beta):
-            e: Column = F.lit(float(beta[0])) * xs[0]
-            for j in range(1, p):
-                e = e + F.lit(float(beta[j])) * xs[j]
-            return e + off
-
-        def _irls(a_disp, beta):
-            """IRLS to convergence at fixed dispersion; returns beta, A,
-            n, it."""
-            A = np.eye(p)
-            n = 0.0
-            it = 0
-            conv = False
-            for it in range(1, max_iter + 1):
-                if des is not None:
-                    X_, yv, ov = des
-                    eta_v = X_ @ beta + ov
-                    mu_v = np.exp(eta_v)
-                    w_v = mu_v / (1 + float(a_disp) * mu_v) + 1e-10
-                    z_v = (eta_v - ov) + (yv - mu_v) / (mu_v + 1e-10)
-                    Xw = X_ * w_v[:, None]
-                    A = Xw.T @ X_
-                    b = X_.T @ (w_v * z_v)
-                    n = float(len(yv))
-                else:
-                    mu = F.exp(_eta(beta))
-                    w = mu / (1 + F.lit(float(a_disp)) * mu) + F.lit(1e-10)
-                    z = (_eta(beta) - off) + (y - mu) / (mu + F.lit(1e-10))
-                    # project w/z once per row (see glm(): inlining expands
-                    # the exp chain into every agg expression)
-                    step = df.select(*[c.alias(f"__p{i}__")
-                                       for i, c in enumerate(xs)],
-                                     w.alias("__w__"), z.alias("__z__"),
-                                     y.alias("__yy__"))
-                    ps = [F.col(f"__p{i}__") for i in range(p)]
-                    wc, zc = F.col("__w__"), F.col("__z__")
-                    aggs = []
-                    for i in range(p):
-                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                        for j in range(i, p):
-                            aggs.append(F.sum(wc * ps[i] * ps[j])
-                                        .alias(f"a{i}_{j}"))
-                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                    row = step.agg(*aggs).collect()[0]
-                    n = float(row["n__"])
-                    A = np.empty((p, p))
-                    b = np.empty(p)
-                    for i in range(p):
-                        b[i] = row[f"b{i}"]
-                        for j in range(i, p):
-                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-                new_beta = np.linalg.solve(A, b)
-                delta = float(np.max(np.abs(new_beta - beta)))
-                beta = new_beta
-                if delta < tol:
-                    conv = True
-                    break
-            return beta, A, n, it, conv
-
         beta = np.zeros(p)
-        if use_bias and float(m0["m"]) > 0:
-            beta[0] = math.log(float(m0["m"]))
+        if use_bias and d.mean > 0:
+            beta[0] = math.log(d.mean)
         # Poisson first stage (α=0) seeds both β and the aux-OLS α estimate
-        beta, A, n, it, conv = _irls(0.0, beta)
+        beta, A, n, it, conv = fisher_scoring(d, beta, *_nb2(0.0),
+                                              max_iter, tol)
         a_disp = alpha
         total_it = it
         if alpha is None:
@@ -1155,7 +902,7 @@ def negative_binomial_regression(df: DataFrame, formula: str,
                     a_new = max(float(np.sum((yv - mu_v) ** 2 - yv))
                                 / float(np.sum(mu_v * mu_v)), 0.0)
                 else:
-                    mu = F.exp(_eta(beta))
+                    mu = F.exp(linear_predictor(beta, xs, off))
                     aux = df.agg(
                         F.sum((y - mu) * (y - mu) - y).alias("num"),
                         F.sum(mu * mu).alias("den")).collect()[0]
@@ -1164,16 +911,16 @@ def negative_binomial_regression(df: DataFrame, formula: str,
                     a_disp = a_new
                     break
                 a_disp = a_new
-                beta, A, n, it, conv = _irls(a_disp, beta)
+                beta, A, n, it, conv = fisher_scoring(
+                    d, beta, *_nb2(a_disp), max_iter, tol)
                 total_it += it
-        elif alpha < 0:
-            raise ValueError("alpha must be >= 0")
         else:
-            beta, A, n, it, conv = _irls(float(alpha), beta)
+            beta, A, n, it, conv = fisher_scoring(
+                d, beta, *_nb2(float(alpha)), max_iter, tol)
             total_it += it
 
         # NB2 deviance at the final fit: 2Σ[y·log(y/μ) − (y+1/α)·log((1+αy)/(1+αμ))]
-        mu = F.exp(_eta(beta))
+        mu = F.exp(linear_predictor(beta, xs, off))
         a_l = F.lit(float(a_disp))
         ylogy = F.when(y > 0, y * F.log(y / mu)).otherwise(F.lit(0.0))
         if a_disp and a_disp > 0:
@@ -1188,31 +935,12 @@ def negative_binomial_regression(df: DataFrame, formula: str,
         deviance = float(fin["dev"])
         # null model: intercept-only + offset at the SAME α.  The mean score
         # Σ(y−μ)/(1+αμ)=0 has no closed form with an offset, so reuse the
-        # IRLS machinery with p=1 (a handful of tiny scans)
+        # Fisher loop with p=1 (a handful of tiny scans)
         if use_bias:
             b0 = np.array([math.log(max(float(fin["ysum"])
                                         / float(fin["seo"]), 1e-12))])
-            for _ in range(max_iter):
-                if des is not None:
-                    _, yv, ov = des
-                    mu0_v = np.exp(float(b0[0]) + ov)
-                    w0_v = mu0_v / (1 + float(a_disp) * mu0_v) + 1e-10
-                    z0_v = float(b0[0]) + (yv - mu0_v) / (mu0_v + 1e-10)
-                    nb0 = float(np.sum(w0_v * z0_v)) / float(np.sum(w0_v))
-                else:
-                    eta0 = F.lit(float(b0[0])) + off
-                    mu0 = F.exp(eta0)
-                    w0 = mu0 / (1 + F.lit(float(a_disp)) * mu0) \
-                        + F.lit(1e-10)
-                    z0 = F.lit(float(b0[0])) \
-                        + (y - mu0) / (mu0 + F.lit(1e-10))
-                    r0 = df.agg(F.sum(w0 * z0).alias("b"),
-                                F.sum(w0).alias("a")).collect()[0]
-                    nb0 = float(r0["b"]) / float(r0["a"])
-                d0 = abs(nb0 - float(b0[0]))
-                b0 = np.array([nb0])
-                if d0 < tol:
-                    break
+            b0 = fisher_scoring(d.intercept_only(), b0,
+                                *_nb2(float(a_disp)), max_iter, tol)[0]
             mu0 = F.exp(F.lit(float(b0[0])) + off)
             if a_disp and a_disp > 0:
                 nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))

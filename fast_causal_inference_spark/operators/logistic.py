@@ -23,9 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.operators.design import (
-    collect_small_design,
-    persist_design,
+    fisher_scoring,
+    irls_design,
 )
+from fast_causal_inference_spark.operators.glm import irls_family
 
 
 @dataclass
@@ -83,88 +84,23 @@ def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
                         use_mllib: bool = False) -> LogisticModel:
     """Fit ``'y ~ x1 + x2'`` (y ∈ {0,1}) by IRLS driver loop.
 
-    Per iteration: one agg of Σ s·xxᵀ and Σ s·x·z (z = working response)
-    → driver solve. Standard errors from the final weighted Gramian inverse.
+    Rows with a NULL outcome or feature are dropped first (complete
+    cases, as in ``glm``).  Each iteration of the shared Fisher-scoring
+    loop (``design.fisher_scoring``) is one aggregation of Σ s·xxᵀ and
+    Σ s·x·z (z = working response) → driver solve, with the canonical
+    logit (w, z) of ``glm.irls_family('binomial')``.  Standard errors
+    come from the final weighted Gramian inverse.
     """
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
     if use_mllib:
         return _mllib_logistic(df, y_expr, feats, use_bias, max_iter, tol)
-    k = len(feats)
-    p = k + (1 if use_bias else 0)
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
+    p = len(feats) + (1 if use_bias else 0)
     with ExitStack() as scope:
-        # persist the projected design for the IRLS loop (design.py)
-        df, y, xs, _ = persist_design(scope, df, y, xs[1:] if use_bias else xs,
-                                      use_bias=use_bias)
-
-        # small-input fast path (round 11, design.collect_small_design):
-        # one collected design, numpy iterations.  Spark's SUM skips NULL
-        # terms — rows with a NULL feature drop from every sum, rows with a
-        # NULL y drop only from the z-sums, count(1) counts all rows — so
-        # the masks below mirror that per-sum semantics exactly (NULLs land
-        # as NaN through Arrow).
-        _nr = int(df.count())
-        des, df = collect_small_design(scope, df, xs, y, F.lit(0.0),
-                                       n_rows=_nr)
-        if des is not None:
-            X_all, y_all, _ = des
-            mx = ~np.isnan(X_all).any(axis=1)
-            Xa, ya = X_all[mx], y_all[mx]
-            my = ~np.isnan(ya)
-
-        beta = np.zeros(p)
-        n = None
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            if des is not None:
-                eta_v = Xa @ beta
-                mu_v = 1.0 / (1.0 + np.exp(-eta_v))
-                s_v = mu_v * (1.0 - mu_v) + 1e-10
-                z_v = eta_v + (ya - mu_v) / s_v
-                A = (Xa * s_v[:, None]).T @ Xa
-                b = Xa[my].T @ (s_v[my] * z_v[my])
-                n = float(len(y_all))
-            else:
-                eta: Column = F.lit(float(beta[0])) * xs[0]
-                for j in range(1, p):
-                    eta = eta + F.lit(float(beta[j])) * xs[j]
-                mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-                s = mu * (1 - mu) + F.lit(1e-10)
-                z = eta + (y - mu) / s
-                # project s/z once per row (inlining would expand the
-                # logistic chain into every one of the p(p+3)/2 agg
-                # expressions)
-                step = df.select(*[c.alias(f"__p{i}__")
-                                   for i, c in enumerate(xs)],
-                                 s.alias("__w__"), z.alias("__z__"))
-                ps = [F.col(f"__p{i}__") for i in range(p)]
-                sc, zc = F.col("__w__"), F.col("__z__")
-                aggs = []
-                for i in range(p):
-                    aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-                    for j in range(i, p):
-                        aggs.append(F.sum(sc * ps[i] * ps[j])
-                                    .alias(f"a{i}_{j}"))
-                aggs.append(F.count(F.lit(1)).alias("n__"))
-                row = step.agg(*aggs).collect()[0]
-                n = float(row["n__"])
-                A = np.empty((p, p))
-                b = np.empty(p)
-                for i in range(p):
-                    b[i] = row[f"b{i}"]
-                    for j in range(i, p):
-                        A[i, j] = A[j, i] = row[f"a{min(i,j)}_{max(i,j)}"]
-            new_beta = np.linalg.solve(A, b)
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if delta < tol:
-                converged = True
-                break
+        d = irls_design(scope, df, y_expr, feats, use_bias=use_bias)
+        beta, A, n, it, converged = fisher_scoring(
+            d, np.zeros(p), *irls_family("binomial"), max_iter, tol)
     # SE from inv of final Fisher information (= weighted Gramian A)
     stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
     return LogisticModel(feature_exprs=feats, use_bias=use_bias, beta=beta, y_expr=y_expr,

@@ -1,13 +1,6 @@
 """Package-level sanity: everything importable, __all__ resolvable."""
 
 
-def test_all_exports_resolve():
-    import fast_causal_inference_spark as fcis
-
-    for name in fcis.__all__:
-        assert getattr(fcis, name, None) is not None, name
-
-
 def test_operator_modules_import():
     import importlib
 
@@ -30,15 +23,32 @@ def test_operator_modules_import():
 
 
 def test_all_exports_resolve():
-    """Every name in __all__ exists and is callable/usable — guards the
-    export wiring as the surface grows."""
+    """Every name in __all__ exists, is not None and is callable/usable —
+    guards the export wiring as the surface grows."""
     import fast_causal_inference_spark as f
 
     for name in f.__all__:
-        assert hasattr(f, name), name
-        obj = getattr(f, name)
+        obj = getattr(f, name, None)
+        assert obj is not None, name
         assert callable(obj) or isinstance(obj, type), name
 
+
+def test_no_test_module_redefines_a_top_level_name():
+    """A second top-level def or class of the same name silently replaces
+    the first, so pytest never collects the first test."""
+    import ast
+    import collections
+    import pathlib
+
+    dups = {}
+    for path in sorted(pathlib.Path(__file__).parent.glob("*.py")):
+        names = collections.Counter(
+            node.name for node in ast.parse(path.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)))
+        dups.update({f"{path.name}::{name}": k
+                     for name, k in names.items() if k > 1})
+    assert dups == {}
 
 
 # Cache calls under operators/ and uplift/ that may bypass the scoped
